@@ -53,10 +53,11 @@ object Queries {
   private val stagedFixtures =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  // per-JVM staging root: the PID keeps two concurrent JVMs (Verify and
-  // Bench) from overwriting/reading the same staged parquet mid-write,
-  // and the sanitized sf-dir name (not its hashCode) keeps two distinct
-  // dirs from ever aliasing to one path within a JVM
+  // per-JVM staging root, deleted at JVM exit: the PID keeps two
+  // concurrent JVMs (Verify and Bench) from overwriting/reading the same
+  // staged parquet mid-write, and the sanitized sf-dir name (not its
+  // hashCode) keeps two distinct dirs from ever aliasing to one path
+  // within a JVM
   private val stageRoot: String =
     s"${System.getProperty("java.io.tmpdir")}/graft_stage/" +
       s"pid${ProcessHandle.current().pid()}"
@@ -75,6 +76,7 @@ object Queries {
   private def stageFixture(s: SparkSession, key: String, dir: String)
                           (make: => DataFrame): DataFrame = {
     val path = stagedFixtures.computeIfAbsent(s"$key|$dir", _ => {
+      TempDirs.deleteOnExit(java.nio.file.Paths.get(stageRoot))
       val p = stagePath(key, dir)
       make.write.mode("overwrite").parquet(p)
       p
@@ -3807,8 +3809,7 @@ object Queries {
     * part of what this gate exercises. */
   private def q97(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_pqindex")
-      .toString
+    val idxDir = TempDirs.create("graft_pqindex").toString
     Similarity.buildPqIndex(emb, idxDir, m = 4, ks = 8, nCells = 8)
     val idx = Similarity.loadPqIndex(s, idxDir)
     Similarity.ivfPqTopK(idx, emb.where(col("vec_id") < 10), k = 5, nProbe = 8)
@@ -3925,8 +3926,7 @@ object Queries {
         when(pmod(col("vec_id"), lit(11L)) === 0,
           transform(col("embedding"), x => x + lit(0.25f)))
           .otherwise(col("embedding")).as("embedding"))
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_pqdelta")
-      .toString
+    val idxDir = TempDirs.create("graft_pqdelta").toString
     Similarity.buildPqIndex(prev, idxDir, m = 4, ks = 8, nCells = 8)
     val idx = Similarity.loadPqIndex(s, idxDir)
     val d = Snapshot.delta(prev, cur, "vec_id",

@@ -116,9 +116,15 @@ package object functions {
   }
 
   /** The reference's standard bbox transform chain
-    * (`bboxes.py:75-81` TransformRawBboxesNode): to_square -> pad -> to_integer. */
-  def bbox_transform(b: Column, extendFactor: Double): Column =
-    bbox_to_integer(bbox_pad_frac(bbox_to_square(b), extendFactor))
+    * (`bboxes.py:75-81` TransformRawBboxesNode): to_square -> pad -> to_integer.
+    * Each step's struct is bound once (a one-element `transform`) before
+    * the next step reads its fields: composed directly, every field
+    * reference copies the whole upstream expression, so the tree — and
+    * its analysis time, seconds per use — grows exponentially. */
+  def bbox_transform(b: Column, extendFactor: Double): Column = {
+    def let(c: Column)(f: Column => Column): Column = element_at(transform(array(c), f), 1)
+    let(let(bbox_to_square(b))(bbox_pad_frac(_, extendFactor)))(bbox_to_integer)
+  }
 
   /** Fixed-bbox head math (`bboxes.py:67-81`): given scalar min/max coords,
     * emit the (xc-r, yc-r, xc+r, yc+r) square as struct<x1,y1,x2,y2: long>.

@@ -10,8 +10,10 @@ import org.apache.spark.sql.functions._
   *    training rows packing wav2vec features, volume, exp/pose codes,
   *    3-D landmarks and blink features, with the audio features resampled
   *    onto the video frame count.
-  *  - vid2vid (`h5.py:95-104`): crops + uv/normal renders.
-  *  - src_seq (`h5.py:107-141`): the wide 12-type pack + blink features.
+  *  - vid2vid_audio (`h5.py:163-237`): windowed audio features + blinks.
+  *  - vid2vid (`h5.py:95-104`, crops + uv/normal renders) and src_seq
+  *    (`h5.py:107-141`, the wide 12-type pack + blink features) are struct
+  *    projections in the pipeline registry over the rosters below.
   *
   * The HDF5 "JPEG-compressed images inside the container" trick
   * (`h5.py:63-83`, plugin 32019) maps to keeping frames as JPEG bytes in
@@ -23,83 +25,77 @@ object Sinks {
   /** jaw pose = pose[:, 3] (`a2en.py:30`). */
   private def jaw(pose: Column): Column = transform(pose, p => element_at(p, 4))
 
-  /** Build the a2en pack from a clip table with columns
-    * (name, wav2vec, volume, exp, pose, landmarks3d, num_frames).
-    * Mirrors `a2en.py:24-45`: wav2vec/volume are resampled onto the video
-    * frame count with `fpsCol` — the PROBED per-clip video fps the
+  /** Append the a2en pack as the struct column `a2en` to a clip table
+    * with columns (wav2vec, volume, exp, pose, landmarks3d).
+    * Mirrors `a2en.py:24-45`: wav2vec/volume are resampled onto
+    * `numFrames` with `fpsCol` — the PROBED per-clip video fps the
     * reference hands to `resample` (`a2en.py:38-44`) — jaw = pose[:, 3],
     * and the landmarks3d blink features are packed alongside
     * (`a2en.py:32-34`). Rows with empty audio features null out
     * (`a2en.py:38-39` raises; here the error channel catches). */
-  def a2enPack(df: DataFrame, fpsCol: Column): DataFrame = {
-    val aligned = df
-      .withColumn("wav2vec_at_fps",
+  def withA2en(df: DataFrame, numFrames: Column, fpsCol: Column): DataFrame = {
+    val fps = fpsCol.cast("double")
+    val blinks = col("_a2en_blinks3d")
+    df.withColumn("_a2en_blinks3d", ClipOps.blinks3d(col("landmarks3d")))
+      .withColumn("a2en", struct(
         when(size(col("wav2vec")) > 0,
-          graft.functions.linear_resample_vec(col("wav2vec"), col("num_frames"),
-            fpsCol.cast("double"))))
-      .withColumn("volume_at_fps",
+          graft.functions.linear_resample_vec(col("wav2vec"), numFrames, fps))
+          .as("audio_features"),
         when(size(col("volume")) > 0,
-          graft.functions.linear_resample(col("volume"), col("num_frames"),
-            fpsCol.cast("double"))))
-      .withColumn("blinks3d", ClipOps.blinks3d(col("landmarks3d")))
-    aligned.select(col("name"),
-      struct(
-        col("wav2vec_at_fps").as("audio_features"),
-        col("volume_at_fps").as("volume"),
+          graft.functions.linear_resample(col("volume"), numFrames, fps))
+          .as("volume"),
         col("exp").as("exp"),
         jaw(col("pose")).as("jaw_pose"),
         col("landmarks3d").as("landmarks3d"),
-        transform(col("blinks3d"), b => b("left_blink")).as("left_blink"),
-        transform(col("blinks3d"), b => b("right_blink")).as("right_blink"),
-        transform(col("blinks3d"), b => b("average_blink")).as("average_blink"))
-        .as("a2en"))
+        transform(blinks, b => b("left_blink")).as("left_blink"),
+        transform(blinks, b => b("right_blink")).as("right_blink"),
+        transform(blinks, b => b("average_blink")).as("average_blink")))
+      .drop("_a2en_blinks3d")
   }
+
+  /** The a2en pack (name, a2en) of a clip table that also carries the
+    * video frame count `num_frames`. */
+  def a2enPack(df: DataFrame, fpsCol: Column): DataFrame =
+    withA2en(df, col("num_frames"), fpsCol).select(col("name"), col("a2en"))
 
   /** 50 Hz default: the wav2vec feature rate, for clips with no probed
     * fps column. */
   def a2enPack(df: DataFrame): DataFrame = a2enPack(df, lit(50.0))
 
-  def writeA2en(df: DataFrame, path: String): Unit =
-    a2enPack(df).write.mode("overwrite")
-      .option("compression", "zstd").parquet(path)
-
-  /** vid2vid pack: (name, crops, render_uv, render_normal). */
-  def writeVid2vid(df: DataFrame, path: String): Unit =
-    df.select(col("name"), col("crops"), col("render_uv"), col("render_normal"))
-      .write.mode("overwrite").option("compression", "zstd").parquet(path)
-
-  /** Vid2vidAudio features (`h5.py:163-237`): wav2vec and volume are
-    * resampled onto the frame count (source rate = the node's `fps`
-    * constructor param, `h5.py:175-183`), window-averaged with edge
-    * replication (`average_features`, `h5.py:235-237`), then concatenated
-    * with the blink features into the per-frame conditioning matrix
+  /** Vid2vidAudio features (`h5.py:163-237`), appended as the struct
+    * column `out`: wav2vec and volume are resampled onto `numFrames`
+    * (source rate = the node's `fps` constructor param,
+    * `h5.py:175-183`), window-averaged with edge replication
+    * (`average_features`, `h5.py:235-237`), then concatenated with the
+    * blink features into the per-frame conditioning matrix
     * `[wav2vec | volume | left_blink | right_blink]` (`h5.py:205-214`).
-    * The windowed wav2vec/volume and average_blink stay their own columns
+    * The windowed wav2vec/volume and average_blink stay their own fields
     * exactly as the reference stores separate datasets (`h5.py:216-226`).
-    * Needs (name, wav2vec, volume, landmarks, num_frames). */
+    * Needs (wav2vec, volume, landmarks). */
+  def withVid2vidAudio(df: DataFrame, numFrames: Column, windowSize: Int,
+                       fpsCol: Column, out: String): DataFrame = {
+    val fps = fpsCol.cast("double")
+    val (w2v, vol, blinks) = (col("_v2va_w2v"), col("_v2va_vol"), col("_v2va_blinks"))
+    df.withColumn("_v2va_w2v", graft.functions.edge_moving_avg_vec(
+        graft.functions.linear_resample_vec(col("wav2vec"), numFrames, fps), windowSize))
+      .withColumn("_v2va_vol", graft.functions.edge_moving_avg(
+        graft.functions.linear_resample(col("volume"), numFrames, fps), windowSize))
+      .withColumn("_v2va_blinks", ClipOps.blinks(col("landmarks")))
+      .withColumn(out, struct(w2v.as("wav2vec"), vol.as("volume"),
+        transform(blinks, b => b("average_blink")).as("average_blink"),
+        zip_with(zip_with(w2v, vol, (w, v) => concat(w, array(v))), blinks,
+          (wv, b) => concat(wv, array(b("left_blink"), b("right_blink"))))
+          .as("audio_blink_feature")))
+      .drop("_v2va_w2v", "_v2va_vol", "_v2va_blinks")
+  }
+
+  /** The vid2vid_audio features as a table (name, wav2vec, volume,
+    * average_blink, audio_blink_feature) of a clip table that also
+    * carries `num_frames`. */
   def vid2vidAudioFeatures(df: DataFrame, windowSize: Int = 16,
                            fpsCol: Column = lit(50.0)): DataFrame =
-    df.withColumn("vol_at_fps",
-        graft.functions.linear_resample(col("volume"), col("num_frames"),
-          fpsCol.cast("double")))
-      .withColumn("vol_windowed",
-        graft.functions.edge_moving_avg(col("vol_at_fps"), windowSize))
-      .withColumn("w2v_at_fps",
-        graft.functions.linear_resample_vec(col("wav2vec"), col("num_frames"),
-          fpsCol.cast("double")))
-      .withColumn("w2v_windowed",
-        graft.functions.edge_moving_avg_vec(col("w2v_at_fps"), windowSize))
-      .withColumn("blinks", ClipOps.blinks(col("landmarks")))
-      .withColumn("audio_blink_feature",
-        zip_with(
-          zip_with(col("w2v_windowed"), col("vol_windowed"),
-            (w, v) => concat(w, array(v))),
-          col("blinks"),
-          (wv, b) => concat(wv, array(b("left_blink"), b("right_blink")))))
-      .select(col("name"), col("w2v_windowed").as("wav2vec"),
-        col("vol_windowed").as("volume"),
-        transform(col("blinks"), b => b("average_blink")).as("average_blink"),
-        col("audio_blink_feature"))
+    withVid2vidAudio(df, col("num_frames"), windowSize, fpsCol, "_v2va")
+      .select(col("name"), col("_v2va.*"))
 
   /** The reference's src_seq type roster (`h5.py:107-120`,
     * SourceSequenceNode.input_types; IMAGES = the frames column). */
@@ -111,17 +107,6 @@ object Sinks {
     * (`h5.py:144-159`). */
   val SrcSeqWithAlphaTypes: Seq[String] =
     SrcSeqTypes.head +: "alpha" +: SrcSeqTypes.tail
-
-  /** src_seq pack: wide select + per-frame blink features from landmarks
-    * (`h5.py:132-139`); `typeCols` defaults to the full reference roster. */
-  def srcSeqPack(df: DataFrame, typeCols: Seq[String] = SrcSeqTypes): DataFrame =
-    df.select((col("name") +: typeCols.map(col) :+
-      ClipOps.blinks(col("landmarks")).as("blinks")): _*)
-
-  def writeSrcSeq(df: DataFrame, path: String,
-                  typeCols: Seq[String] = SrcSeqTypes): Unit =
-    srcSeqPack(df, typeCols).write.mode("overwrite")
-      .option("compression", "zstd").parquet(path)
 
   /** Z-order-clustered parquet write (the OPTIMIZE ZORDER layout): rows
     * are range-partitioned and sorted by the Morton key of `keys`, so

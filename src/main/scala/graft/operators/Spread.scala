@@ -76,12 +76,18 @@ private[graft] object Spread {
     m
   }
 
-  def fanOut(df: DataFrame): DataFrame = {
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    val plan = df.queryExecution.analyzed
+  def fanOut(df: DataFrame): DataFrame = fanOut(df, df)
+
+  /** `fanOut` of `df`, decided on `layout`: the frame `df` is a narrow,
+    * layout-preserving transform of. Probing `layout` instead of `df`
+    * keeps the probe away from an `observe` placed in `df` — building an
+    * observed frame's RDD fills its `Observation` with an empty result. */
+  def fanOut(df: DataFrame, layout: DataFrame): DataFrame = {
+    val p = layout.sparkSession.sparkContext.defaultParallelism
+    val plan = layout.queryExecution.analyzed
     if (!probeSafe(plan)) df
     else {
-      val cache = cacheFor(df.sparkSession)
+      val cache = cacheFor(layout.sparkSession)
       val key = plan.canonicalized
       // probe OUTSIDE the map (get, then putIfAbsent): computeIfAbsent
       // would hold the bin lock across the Spark probe and serialize
@@ -89,7 +95,7 @@ private[graft] object Spread {
       // probe is cheaper than that.
       var narrow = cache.get(key)
       if (narrow == null) {
-        narrow = java.lang.Boolean.valueOf(df.rdd.getNumPartitions < p)
+        narrow = java.lang.Boolean.valueOf(layout.rdd.getNumPartitions < p)
         if (cache.size >= maxCachedPlans) cache.clear()
         cache.putIfAbsent(key, narrow)
       }

@@ -62,9 +62,8 @@ object Vision {
 
   private val bboxStruct = ArrayType(ArrayType(DoubleType, false), false)
 
-  val detectSchema: StructType = StructType(Seq(
-    StructField("name", StringType, nullable = false),
-    StructField("raw_bboxes", ArrayType(bboxStruct, false)))) // per frame: (N,5)
+  private val detectFields: Seq[StructField] = Seq(
+    StructField("raw_bboxes", ArrayType(bboxStruct, false))) // per frame: (N,5)
 
   /** `op` must be distinct per operator family — the ModelOp cache is
     * keyed per executor, and two ops sharing a key would get each other's
@@ -73,73 +72,86 @@ object Vision {
     def key: String = s"vision-$op-$id"; def load(): T = f
   }
 
-  /** frames: array<binary> per clip -> best-candidate raw bboxes per frame
-    * (kept as the full candidate list; best-face selection is
-    * `ClipOps.bestFacePerFrame`). Batch default matches the reference
-    * (face-align batch 8, BASELINE.md). */
+  private def detectKernel(det: Detector, batch: Seq[Row]): Seq[Row] =
+    batch.map(r => Row(r.getSeq[Array[Byte]](0).map(f => det(f).toSeq)))
+
+  /** Appends `raw_bboxes` (per frame, the full (N,5) candidate list;
+    * best-face selection is `ClipOps.bestFacePerFrame`) computed from
+    * `framesCol`. Batch default matches the reference (face-align batch
+    * 8, BASELINE.md). */
+  def withDetections(df: DataFrame, framesCol: String, batchSize: Int = 8,
+                     detector: Detector = StubDetector,
+                     detectorId: String = "stub"): DataFrame =
+    ModelOp.appendBatches(df, Seq(framesCol), detectFields, batchSize,
+      Res("detect", detectorId, detector))(detectKernel)
+
+  /** frames: array<binary> per clip -> (name, raw_bboxes). */
   def detectFaces(df: DataFrame, nameCol: String, framesCol: String,
                   batchSize: Int = 8,
                   detector: Detector = StubDetector,
                   detectorId: String = "stub"): DataFrame =
-    ModelOp.mapBatches(
-      df.selectExpr(s"$nameCol as name", s"$framesCol as frames"),
-      detectSchema, batchSize, Res("detect", detectorId, detector)) { (det, batch) =>
-      batch.iterator.map { r =>
-        val frames = r.getSeq[Array[Byte]](1)
-        Row(r.getString(0), frames.map(f => det(f).toSeq).toSeq)
-      }
-    }
+    ModelOp.selectBatches(df, nameCol, Seq(framesCol), detectFields, batchSize,
+      Res("detect", detectorId, detector))(detectKernel)
 
   private val pointStruct = StructType(Seq(
     StructField("x", DoubleType), StructField("y", DoubleType)))
 
-  val landmarksSchema: StructType = StructType(Seq(
-    StructField("name", StringType, nullable = false),
-    StructField("landmarks", ArrayType(ArrayType(pointStruct, false), false))))
+  private val landmarkFields: Seq[StructField] = Seq(
+    StructField("landmarks", ArrayType(ArrayType(pointStruct, false), false)))
 
-  /** Landmarks come out as struct<x,y> points (the clip table's landmark
+  private def alignKernel(lm: LandmarkModel, batch: Seq[Row]): Seq[Row] =
+    batch.map(r => Row(r.getSeq[Array[Byte]](0).map(f =>
+      lm(f).map(p => Row(p(0), p(1))).toSeq)))
+
+  /** Appends `landmarks` as struct<x,y> points (the clip table's landmark
     * column form, §1.3) so bbox/blink ops consume them directly. */
+  def withLandmarks(df: DataFrame, framesCol: String, batchSize: Int = 8,
+                    model: LandmarkModel = StubLandmarks,
+                    modelId: String = "stub"): DataFrame =
+    ModelOp.appendBatches(df, Seq(framesCol), landmarkFields, batchSize,
+      Res("align", modelId, model))(alignKernel)
+
+  /** frames: array<binary> per clip -> (name, landmarks). */
   def alignFaces(df: DataFrame, nameCol: String, framesCol: String,
                  batchSize: Int = 8,
                  model: LandmarkModel = StubLandmarks,
                  modelId: String = "stub"): DataFrame =
-    ModelOp.mapBatches(
-      df.selectExpr(s"$nameCol as name", s"$framesCol as frames"),
-      landmarksSchema, batchSize, Res("align", modelId, model)) { (lm, batch) =>
-      batch.iterator.map { r =>
-        val frames = r.getSeq[Array[Byte]](1)
-        Row(r.getString(0),
-          frames.map(f => lm(f).map(p => Row(p(0), p(1))).toSeq).toSeq)
-      }
-    }
+    ModelOp.selectBatches(df, nameCol, Seq(framesCol), landmarkFields, batchSize,
+      Res("align", modelId, model))(alignKernel)
 
-  val emocaSchema: StructType = StructType(Seq(
-    StructField("name", StringType, nullable = false),
+  private val emocaFields: Seq[StructField] = Seq(
     StructField("shape", ArrayType(ArrayType(DoubleType, false), false)),
     StructField("tex", ArrayType(ArrayType(DoubleType, false), false)),
     StructField("exp", ArrayType(ArrayType(DoubleType, false), false)),
     StructField("pose", ArrayType(ArrayType(DoubleType, false), false)),
     StructField("cam", ArrayType(ArrayType(DoubleType, false), false)),
-    StructField("light", ArrayType(ArrayType(ArrayType(DoubleType, false), false), false))))
+    StructField("light", ArrayType(ArrayType(ArrayType(DoubleType, false), false), false)))
 
-  /** crops: array<binary> per clip -> the six FLAME code series
-    * (frame axis = array index; shapes as §1.3). */
+  private def emocaKernel(enc: EmocaEncoder, batch: Seq[Row]): Seq[Row] =
+    batch.map { r =>
+      val codes = r.getSeq[Array[Byte]](0).map(enc)
+      Row(codes.map(_.shape.toSeq), codes.map(_.tex.toSeq),
+        codes.map(_.exp.toSeq), codes.map(_.pose.toSeq),
+        codes.map(_.cam.toSeq), codes.map(_.light.map(_.toSeq).toSeq))
+    }
+
+  /** Appends the six FLAME code series of `cropsCol` (array<binary> per
+    * clip; frame axis = array index; shapes as §1.3). A clip whose crops
+    * are null (a frame failed upstream) gets null codes. */
+  def withEmoca(df: DataFrame, cropsCol: String, batchSize: Int = 8,
+                encoder: EmocaEncoder = StubEmoca,
+                encoderId: String = "stub"): DataFrame =
+    ModelOp.appendBatches(df, Seq(cropsCol), emocaFields, batchSize,
+      Res("emoca", encoderId, encoder))(emocaKernel)
+
+  /** crops: array<binary> per clip -> (name, shape, tex, exp, pose, cam,
+    * light). */
   def emocaEncode(df: DataFrame, nameCol: String, cropsCol: String,
                   batchSize: Int = 8,
                   encoder: EmocaEncoder = StubEmoca,
                   encoderId: String = "stub"): DataFrame =
-    ModelOp.mapBatches(
-      df.selectExpr(s"$nameCol as name", s"$cropsCol as crops"),
-      emocaSchema, batchSize, Res("emoca", encoderId, encoder)) { (enc, batch) =>
-      batch.iterator.map { r =>
-        val codes = r.getSeq[Array[Byte]](1).map(enc)
-        Row(r.getString(0),
-          codes.map(_.shape.toSeq).toSeq, codes.map(_.tex.toSeq).toSeq,
-          codes.map(_.exp.toSeq).toSeq, codes.map(_.pose.toSeq).toSeq,
-          codes.map(_.cam.toSeq).toSeq,
-          codes.map(_.light.map(_.toSeq).toSeq).toSeq)
-      }
-    }
+    ModelOp.selectBatches(df, nameCol, Seq(cropsCol), emocaFields, batchSize,
+      Res("emoca", encoderId, encoder))(emocaKernel)
 
   /** Tiny deterministic FLAME-shaped asset set (3 verts, 2 joints, one
     * face) standing in for the published FLAME pickle (`flame.py:43-312`):
@@ -158,59 +170,53 @@ object Vision {
     lmkFaces = Array(Array(0, 1, 2)),
     lmkBary = Array(Array(1.0 / 3, 1.0 / 3, 1.0 / 3)))
 
-  val flameSchema: StructType = StructType(Seq(
-    StructField("name", StringType, nullable = false),
+  private val flameFields: Seq[StructField] = Seq(
     StructField("verts", ArrayType(ArrayType(DoubleType, false), false)),
-    StructField("landmarks3d", ArrayType(ArrayType(DoubleType, false), false))))
+    StructField("landmarks3d", ArrayType(ArrayType(DoubleType, false), false)))
 
-  /** `FlameNode` (`flame.py:47-108`): per-frame (shape, exp, pose) codes ->
-    * flat vertex and 3-D landmark arrays via the pure-Scala LBS forward
-    * pass. Batch default 64 = the reference's FLAME batch (BASELINE.md). */
-  def flameForward(df: DataFrame, nameCol: String, shapeCol: String,
-                   expCol: String, poseCol: String, batchSize: Int = 64,
-                   model: Flame.FlameModel = stubFlameModel(),
-                   modelId: String = "stub"): DataFrame =
-    ModelOp.mapBatches(
-      df.selectExpr(s"$nameCol as name", s"$shapeCol as shape",
-        s"$expCol as exp", s"$poseCol as pose"),
-      flameSchema, batchSize, Res("flame", modelId, model)) { (m, batch) =>
-      batch.iterator.map { r =>
-        val shapes = r.getSeq[scala.collection.Seq[Double]](1)
-        val exps = r.getSeq[scala.collection.Seq[Double]](2)
-        val poses = r.getSeq[scala.collection.Seq[Double]](3)
+  /** `FlameNode` (`flame.py:47-108`): appends per-frame flat vertex and
+    * 3-D landmark arrays computed from the (shape, exp, pose) codes via
+    * the pure-Scala LBS forward pass. Batch default 64 = the reference's
+    * FLAME batch (BASELINE.md). */
+  def withFlame(df: DataFrame, shapeCol: String, expCol: String, poseCol: String,
+                batchSize: Int = 64,
+                model: Flame.FlameModel = stubFlameModel(),
+                modelId: String = "stub"): DataFrame =
+    ModelOp.appendBatches(df, Seq(shapeCol, expCol, poseCol), flameFields, batchSize,
+      Res("flame", modelId, model)) { (m, batch) =>
+      batch.map { r =>
+        val shapes = r.getSeq[scala.collection.Seq[Double]](0)
+        val exps = r.getSeq[scala.collection.Seq[Double]](1)
+        val poses = r.getSeq[scala.collection.Seq[Double]](2)
         val out = shapes.indices.map { i =>
           Flame.forward(m, shapes(i).toArray, exps(i).toArray,
             poses(i).toArray.take(6))
         }
-        Row(r.getString(0), out.map(_._1.toSeq), out.map(_._2.toSeq))
+        Row(out.map(_._1.toSeq), out.map(_._2.toSeq))
       }
     }
 
-  val renderSchema: StructType = StructType(Seq(
-    StructField("name", StringType, nullable = false),
+  private val renderFields: Seq[StructField] = Seq(
     StructField("render_mask", ArrayType(BinaryType, false)),
     StructField("render_normal", ArrayType(BinaryType, false)),
-    StructField("render_uv", ArrayType(BinaryType, false))))
+    StructField("render_uv", ArrayType(BinaryType, false)))
 
   private case class RenderAssets(faces: Array[Array[Int]], uvs: Array[Double])
 
-  /** `RenderingNode` (`rendering.py:53-143`): per-frame (verts, cam) ->
-    * mask / normal / uv rasters via the software rasterizer (orthographic
-    * cam = (scale, tx, ty) like `batch_orth_proj`). Mesh topology comes
-    * from the model resource; frames stay opaque bytes in the relational
-    * layer. */
-  def renderFrames(df: DataFrame, nameCol: String, vertsCol: String,
-                   camCol: String, size: Int = 64, batchSize: Int = 64,
-                   assetsId: String = "stub"): DataFrame = {
-    val assets = RenderAssets(Array(Array(0, 1, 2)),
-      Array(0.0, 0.0, 1.0, 0.0, 0.0, 1.0))
-    ModelOp.mapBatches(
-      df.selectExpr(s"$nameCol as name", s"$vertsCol as verts",
-        s"$camCol as cam"),
-      renderSchema, batchSize, Res("render", assetsId, assets)) { (a, batch) =>
-      batch.iterator.map { r =>
-        val verts = r.getSeq[scala.collection.Seq[Double]](1)
-        val cams = r.getSeq[scala.collection.Seq[Double]](2)
+  /** `RenderingNode` (`rendering.py:53-143`): appends per-frame mask /
+    * normal / uv rasters of (verts, cam) via the software rasterizer
+    * (orthographic cam = (scale, tx, ty) like `batch_orth_proj`). Mesh
+    * topology comes from the model resource; frames stay opaque bytes in
+    * the relational layer. */
+  def withRenders(df: DataFrame, vertsCol: String, camCol: String,
+                  size: Int = 64, batchSize: Int = 64,
+                  assetsId: String = "stub"): DataFrame =
+    ModelOp.appendBatches(df, Seq(vertsCol, camCol), renderFields, batchSize,
+      Res("render", assetsId, RenderAssets(Array(Array(0, 1, 2)),
+        Array(0.0, 0.0, 1.0, 0.0, 0.0, 1.0)))) { (a, batch) =>
+      batch.map { r =>
+        val verts = r.getSeq[scala.collection.Seq[Double]](0)
+        val cams = r.getSeq[scala.collection.Seq[Double]](1)
         val rendered = verts.indices.map { i =>
           val c = cams(i)
           // EMOCA cam codes are centred near 0; offset to a usable ortho
@@ -218,9 +224,7 @@ object Vision {
           Renderer.render(verts(i).toArray, a.faces, a.uvs,
             (1.0 + c(0), c(1), c(2)), size)
         }
-        Row(r.getString(0), rendered.map(_.mask), rendered.map(_.normal),
-          rendered.map(_.uv))
+        Row(rendered.map(_.mask), rendered.map(_.normal), rendered.map(_.uv))
       }
     }
-  }
 }

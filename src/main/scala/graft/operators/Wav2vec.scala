@@ -61,10 +61,9 @@ object Wav2vec {
     }.toArray
   }
 
-  val outSchema: StructType = StructType(Seq(
-    StructField("name", StringType, nullable = false),
+  private val outFields: Seq[StructField] = Seq(
     StructField("wav2vec", ArrayType(ArrayType(DoubleType, false), false)),
-    StructField("volume", ArrayType(DoubleType, false))))
+    StructField("volume", ArrayType(DoubleType, false)))
 
   private case class EncoderResource(id: String, enc: Encoder)
       extends ModelResource[Encoder] {
@@ -72,19 +71,26 @@ object Wav2vec {
     def load(): Encoder = enc
   }
 
-  /** (name, wav: array<double>) -> (name, wav2vec, volume), batched with a
-    * per-executor lazily-loaded encoder. batchSize default mirrors the
-    * reference config (wav2vec batch 8, BASELINE.md). */
+  private def kernel(sampleRate: Int)(enc: Encoder, batch: Seq[Row]): Seq[Row] =
+    batch.map { r =>
+      val wav = r.getSeq[Double](0).toArray
+      Row(encodeWaveform(wav, sampleRate, enc), volume(wav, sampleRate))
+    }
+
+  /** Appends (wav2vec, volume) computed from `wavCol` (array<double>),
+    * batched with a per-executor lazily-loaded encoder. batchSize default
+    * mirrors the reference config (wav2vec batch 8, BASELINE.md). */
+  def withFeatures(df: DataFrame, wavCol: String, sampleRate: Int = 16000,
+                   batchSize: Int = 8, encoder: Encoder = StubEncoder,
+                   encoderId: String = "stub"): DataFrame =
+    ModelOp.appendBatches(df, Seq(wavCol), outFields, batchSize,
+      EncoderResource(encoderId, encoder))(kernel(sampleRate))
+
+  /** (name, wav) -> (name, wav2vec, volume). */
   def extract(df: DataFrame, nameCol: String, wavCol: String,
               sampleRate: Int = 16000, batchSize: Int = 8,
               encoder: Encoder = StubEncoder,
               encoderId: String = "stub"): DataFrame =
-    ModelOp.mapBatches(
-      df.selectExpr(s"$nameCol as name", s"$wavCol as wav"),
-      outSchema, batchSize, EncoderResource(encoderId, encoder)) { (enc, batch) =>
-      batch.iterator.map { r =>
-        val wav = r.getSeq[Double](1).toArray
-        Row(r.getString(0), encodeWaveform(wav, sampleRate, enc), volume(wav, sampleRate))
-      }
-    }
+    ModelOp.selectBatches(df, nameCol, Seq(wavCol), outFields, batchSize,
+      EncoderResource(encoderId, encoder))(kernel(sampleRate))
 }

@@ -1,9 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions._
-import graft.operators.ClipOps
+import graft.operators.{ClipOps, ImageOps, Sinks, Spread, Vision, Wav2vec}
 
 /** The pipeline driver: a Spark-first re-expression of the reference's
   * `Engine` (`dpl/processor/engine.py`) and node protocol
@@ -16,15 +16,24 @@ import graft.operators.ClipOps
   *    upstream node.
   *  - bind-time validation (`base.py:167-188`): unknown op, missing input
   *    type, duplicate output type -> error before any job runs.
-  *  - execution: each op is a `DataFrame => DataFrame` column transform;
-  *    the whole DAG becomes ONE Catalyst plan — the reference's
-  *    chunk-interleaved generators (`engine.py:64-73`) are subsumed by
-  *    per-partition pipelining, its joblib pools by partition parallelism.
-  *  - memoization (`base.py:135`): a left-anti join against the sink's
-  *    already-written `name`s skips completed clips unless `recompute`.
+  *  - execution: each op appends its output columns to the row it reads —
+  *    a column expression or one batched `mapPartitions`
+  *    ([[graft.operators.ModelOp.appendBatches]]), never a join back on
+  *    `name` — so the whole DAG is ONE narrow stage over the clip scan.
+  *    The reference's chunk-interleaved generators (`engine.py:64-73`) are
+  *    subsumed by per-partition pipelining, its joblib pools by partition
+  *    parallelism; `Spread.fanOut` spreads a scan narrower than the
+  *    session's cores before the chain.
+  *  - one action per execute: a single observed write commits the good
+  *    rows and, through `Observation`s on the same plan, returns the input,
+  *    processed and error counts; the manifest is then written from the
+  *    files that write committed, so it never re-runs a node.
+  *  - memoization (`base.py:135`): a left-anti join against the manifest's
+  *    `name`s skips completed clips unless `recompute`.
   *  - row-level error capture (`base.py:137-142`): ops surface row failures
-  *    as nulls (NaN-guard semantics); failed rows are diverted to an error
-  *    side-output and reported, matching `NodeExecReport`.
+  *    as nulls (a null input gives null outputs); failed rows are diverted
+  *    to an error side-output and counted per node, matching
+  *    `NodeExecReport` (`base.py:12-27`).
   *  - `test_run` probe (`base.py:106-112`): limit(1) dry pass.
   */
 final case class NodeSpec(op: String, params: Map[String, String] = Map.empty)
@@ -37,7 +46,8 @@ trait ClipOp {
   def inputTypes: Seq[String]
   def outputTypes: Seq[String]
   def apply(df: DataFrame, params: Map[String, String]): DataFrame
-  /** Predicate marking failed rows AFTER apply; default: any null output. */
+  /** Predicate marking failed rows AFTER apply (the node's error count in
+    * the execution report); default: any null output. */
   def failed(df: DataFrame): Column =
     outputTypes.map(t => col(t).isNull).reduce(_ || _)
 }
@@ -47,6 +57,13 @@ trait ClipOp {
 object OpRegistry {
   private def p(params: Map[String, String], key: String, dflt: Double): Double =
     params.get(key).map(_.toDouble).getOrElse(dflt)
+
+  /** Detector (N,5) arrays -> the candidate structs the bbox ops read. */
+  private def candidates(df: DataFrame): DataFrame =
+    df.withColumn("raw_bboxes", expr(
+      """transform(raw_bboxes, f -> transform(f, c ->
+        |  struct(c[0] as x1, c[1] as y1, c[2] as x2, c[3] as y2,
+        |         c[4] as score)))""".stripMargin))
 
   val ops: Map[String, ClipOp] = Map(
     // landmarks: array<array<struct<x,y>>> -> bboxes per frame
@@ -97,20 +114,12 @@ object OpRegistry {
       def apply(df: DataFrame, params: Map[String, String]): DataFrame =
         df.withColumn("best_bboxes", ClipOps.bestFacePerFrame(col("raw_bboxes")))
     },
-    // ---- inference-backed nodes (mapPartitions ops joined back on name;
+    // ---- inference-backed nodes (batched kernels appending in place;
     //      models are pluggable ModelResources, stubs by default) ----
     "face_detection" -> new ClipOp {
       val inputTypes = Seq("frames"); val outputTypes = Seq("raw_bboxes")
-      def apply(df: DataFrame, params: Map[String, String]): DataFrame = {
-        val det = graft.operators.Vision
-          .detectFaces(df, "name", "frames")
-          // (N,5) arrays -> candidate structs for the bbox ops
-          .withColumn("raw_bboxes", expr(
-            """transform(raw_bboxes, f -> transform(f, c ->
-              |  struct(c[0] as x1, c[1] as y1, c[2] as x2, c[3] as y2,
-              |         c[4] as score)))""".stripMargin))
-        df.join(det, Seq("name"))
-      }
+      def apply(df: DataFrame, params: Map[String, String]): DataFrame =
+        candidates(Vision.withDetections(df, "frames"))
     },
     "transform_bboxes" -> new ClipOp {
       val inputTypes = Seq("best_bboxes"); val outputTypes = Seq("bboxes")
@@ -121,77 +130,48 @@ object OpRegistry {
     },
     "crop" -> new ClipOp {
       val inputTypes = Seq("frames", "bboxes"); val outputTypes = Seq("crops")
-      def apply(df: DataFrame, params: Map[String, String]): DataFrame = {
-        val size = p(params, "size", 224).toInt
-        // Collect EVERY frame slot (failed frames as null crop inside the
-        // struct — collect_list only skips null elements, not structs with
-        // null fields) so the crops array stays index-aligned with frames;
-        // a clip with any failed frame gets crops=null and flows to the
-        // error side-output, matching the reference's fail-the-clip
-        // semantics instead of silently shifting the frame axis.
-        val cropped = graft.operators.ImageOps
-          .cropFrames(df, "name", "frames",
-            "bboxes", size)
-          .groupBy("name")
-          .agg(transform(array_sort(collect_list(
-                 struct(col("frame_idx"), col("crop")))), x => x("crop"))
-               .as("_crops_all"),
-               max(col("error").isNotNull.cast("int")).as("_any_err"))
-          .select(col("name"),
-            when(col("_any_err") === 0, col("_crops_all")).as("crops"))
-        df.join(cropped, Seq("name"), "left")
-      }
+      def apply(df: DataFrame, params: Map[String, String]): DataFrame =
+        ImageOps.withCrops(df, "frames", "bboxes", p(params, "size", 224).toInt)
     },
     "emoca" -> new ClipOp {
       val inputTypes = Seq("crops")
       val outputTypes = Seq("shape", "tex", "exp", "pose", "cam", "light")
       def apply(df: DataFrame, params: Map[String, String]): DataFrame =
-        df.join(graft.operators.Vision.emocaEncode(df, "name", "crops"),
-          Seq("name"))
+        Vision.withEmoca(df, "crops")
     },
     "wav2vec" -> new ClipOp {
       val inputTypes = Seq("wav"); val outputTypes = Seq("wav2vec", "volume")
       def apply(df: DataFrame, params: Map[String, String]): DataFrame =
-        df.join(graft.operators.Wav2vec.extract(df, "name", "wav",
-          p(params, "sample_rate", 16000).toInt), Seq("name"))
+        Wav2vec.withFeatures(df, "wav", p(params, "sample_rate", 16000).toInt)
     },
     "flame" -> new ClipOp {
       val inputTypes = Seq("shape", "exp", "pose")
       val outputTypes = Seq("verts", "landmarks3d")
       def apply(df: DataFrame, params: Map[String, String]): DataFrame =
-        df.join(graft.operators.Vision.flameForward(df, "name",
-          "shape", "exp", "pose",
-          batchSize = p(params, "batch_size", 64).toInt), Seq("name"))
+        Vision.withFlame(df, "shape", "exp", "pose",
+          batchSize = p(params, "batch_size", 64).toInt)
     },
     "render" -> new ClipOp {
       val inputTypes = Seq("verts", "cam")
       val outputTypes = Seq("render_mask", "render_normal", "render_uv")
       def apply(df: DataFrame, params: Map[String, String]): DataFrame =
-        df.join(graft.operators.Vision.renderFrames(df, "name",
-          "verts", "cam", size = p(params, "size", 64).toInt,
-          batchSize = p(params, "batch_size", 64).toInt), Seq("name"))
+        Vision.withRenders(df, "verts", "cam", size = p(params, "size", 64).toInt,
+          batchSize = p(params, "batch_size", 64).toInt)
     },
     "face_alignment" -> new ClipOp {
       val inputTypes = Seq("frames")
       val outputTypes = Seq("landmarks", "raw_bboxes")
-      def apply(df: DataFrame, params: Map[String, String]): DataFrame = {
-        val det = graft.operators.Vision.detectFaces(df, "name", "frames")
-          .withColumn("raw_bboxes", expr(
-            """transform(raw_bboxes, f -> transform(f, c ->
-              |  struct(c[0] as x1, c[1] as y1, c[2] as x2, c[3] as y2,
-              |         c[4] as score)))""".stripMargin))
-        df.join(graft.operators.Vision.alignFaces(df, "name", "frames"), Seq("name"))
-          .join(det, Seq("name"))
-      }
+      def apply(df: DataFrame, params: Map[String, String]): DataFrame =
+        candidates(Vision.withDetections(Vision.withLandmarks(df, "frames"), "frames"))
     },
     "face_landmarks" -> new ClipOp {
       val inputTypes = Seq("frames", "raw_bboxes")
       val outputTypes = Seq("landmarks")
       def apply(df: DataFrame, params: Map[String, String]): DataFrame =
-        df.join(graft.operators.Vision.alignFaces(df, "name", "frames"), Seq("name"))
+        Vision.withLandmarks(df, "frames")
     },
     // ---- ffmpeg transcodes (shell-outs; rows degrade to the error channel
-    //      when the binary is absent) ----
+    //      when the binary is absent; joined back on name) ----
     "video_to_frames" -> new ClipOp {
       val inputTypes = Seq("video"); val outputTypes = Seq("frames")
       def apply(df: DataFrame, params: Map[String, String]): DataFrame =
@@ -249,8 +229,7 @@ object OpRegistry {
         // resample target = the EMOCA code count (`a2en.py:37`:
         // num = len(data["exp"])) — NOT the video frame count; they
         // diverge exactly when upstream EMOCA dropped frames
-        df.join(graft.operators.Sinks.a2enPack(
-          df.withColumn("num_frames", size(col("exp"))), fps), Seq("name"))
+        Sinks.withA2en(df, size(col("exp")), fps)
       }
     },
     "vid2vid" -> new ClipOp {
@@ -261,19 +240,19 @@ object OpRegistry {
           struct(col("crops"), col("render_uv"), col("render_normal")))
     },
     "src_seq" -> new ClipOp {
-      val inputTypes = graft.operators.Sinks.SrcSeqTypes
+      val inputTypes = Sinks.SrcSeqTypes
       val outputTypes = Seq("src_seq")
       def apply(df: DataFrame, params: Map[String, String]): DataFrame =
         df.withColumn("src_seq", struct(
-          graft.operators.Sinks.SrcSeqTypes.map(col) :+
+          Sinks.SrcSeqTypes.map(col) :+
             ClipOps.blinks(col("landmarks")).as("blinks"): _*))
     },
     "src_seq_alpha" -> new ClipOp {
-      val inputTypes = graft.operators.Sinks.SrcSeqWithAlphaTypes
+      val inputTypes = Sinks.SrcSeqWithAlphaTypes
       val outputTypes = Seq("src_seq")
       def apply(df: DataFrame, params: Map[String, String]): DataFrame =
         df.withColumn("src_seq", struct(
-          graft.operators.Sinks.SrcSeqWithAlphaTypes.map(col) :+
+          Sinks.SrcSeqWithAlphaTypes.map(col) :+
             ClipOps.blinks(col("landmarks")).as("blinks"): _*))
     },
     "vid2vid_audio" -> new ClipOp {
@@ -284,13 +263,9 @@ object OpRegistry {
         "wav2vec", "volume", "landmarks")
       val outputTypes = Seq("vid2vid_audio")
       def apply(df: DataFrame, params: Map[String, String]): DataFrame = {
-        val packed = graft.operators.Sinks.vid2vidAudioFeatures(
-          df.withColumn("num_frames", size(col("crops"))),
-          p(params, "window_size", 16).toInt,
-          lit(p(params, "fps", 50.0)))
-        df.join(packed.select(col("name"),
-          struct(col("wav2vec"), col("volume"), col("average_blink"),
-            col("audio_blink_feature")).as("vid2vid_audio")), Seq("name"))
+        Sinks.withVid2vidAudio(df, size(col("crops")),
+          p(params, "window_size", 16).toInt, lit(p(params, "fps", 50.0)),
+          "vid2vid_audio")
       }
     })
 
@@ -348,55 +323,81 @@ final case class Pipeline(nodes: Seq[NodeSpec], outputDir: String) {
   }
 
   /** Execute over a clip table (must have `name` + input type columns).
-    * Returns (outputs, report). With `testRun`, processes limit(1) first
-    * (probe) before the full pass — `base.py:106-112`. */
+    * Returns (the rows this run committed, report). With `testRun`,
+    * processes limit(1) first (probe) before the full pass —
+    * `base.py:106-112`.
+    *
+    * The node chain runs in ONE action: the append of the good rows to
+    * `clips`. Two observations ride on that plan — the input rows below
+    * the memo filter, the chain's rows and per-node null outputs above
+    * the last node — so the report costs no further pass. */
   def execute(spark: SparkSession, clips: DataFrame,
               recompute: Boolean = false,
               testRun: Boolean = false): (DataFrame, Seq[PipelineReport]) = {
     val inputTypes = clips.columns.toSet - "name"
     validate(inputTypes)
 
-    if (testRun) runOnce(clips.limit(1))._1.count()
+    if (testRun) chain(clips.limit(1)).count()
 
+    val seen = Observation()
+    val input = Spread.fanOut(clips.observe(seen, count(lit(1)).as("rows")), clips)
     // Memoization: skip clips whose outputs already exist in the sink
-    // manifest (left-anti join on name), unless recompute.
+    // manifest (left-anti join on name), unless recompute. The optimizer
+    // runs the anti-join below the fan-out, so skipped clips never move.
     val manifestPath = s"$outputDir/_manifest"
     val todo =
-      if (recompute) clips
-      else scala.util.Try(spark.read.parquet(manifestPath)).toOption match {
-        case Some(manifest) =>
-          clips.join(manifest.select("name"), Seq("name"), "left_anti")
-        case None => clips
-      }
+      if (recompute || dataFiles(spark, manifestPath).isEmpty) input
+      else input.join(spark.read.schema("name STRING").parquet(manifestPath),
+        Seq("name"), "left_anti")
+    val out = chain(todo)
+    // error channel: a row failed at a node when any of its outputs is null
+    val failed = nodes.map(spec => OpRegistry.resolve(spec.op).get.failed(out))
+    val anyFail = failed.reduceOption(_ || _).getOrElse(lit(false))
+    val done = Observation()
+    val observed = out.observe(done, count(lit(1)).as("rows"),
+      count_if(anyFail).as("errors") +:
+        failed.zipWithIndex.map { case (f, i) => count_if(f).as(s"node$i") }: _*)
 
-    val (out, reports) = runOnce(todo)
+    val clipsPath = s"$outputDir/clips"
+    val before = dataFiles(spark, clipsPath).getOrElse(Nil).toSet
+    observed.where(!anyFail).write.mode("append").parquet(clipsPath)
+    val added = dataFiles(spark, clipsPath).getOrElse(Nil).filterNot(before)
+    val committed =
+      if (added.isEmpty) spark.createDataFrame(java.util.List.of[Row](), out.schema)
+      else spark.read.schema(out.schema).parquet(added: _*)
 
-    // Split error channel: rows where any node failed.
-    val failCols = nodes.flatMap { spec =>
-      OpRegistry.resolve(spec.op).get.outputTypes.map(t => col(t).isNull)
+    // an observation the optimizer pruned with a provably empty input
+    // completes with no metrics: it saw no row
+    def counts(o: Observation): String => Long = {
+      val m = o.get
+      k => m.get(k).fold(0L)(_.asInstanceOf[Long])
     }
-    val anyFail = failCols.reduceOption(_ || _).getOrElse(lit(false))
-    val good = out.where(!anyFail)
-    val bad = out.where(anyFail)
-
-    good.write.mode("append").parquet(s"$outputDir/clips")
-    good.select("name").write.mode("append").parquet(manifestPath)
-
-    val processed = good.count()
-    val errors = bad.count()
-    val skipped = clips.count() - processed - errors
-    val report = reports :+
+    val totals = counts(done)
+    val rows = totals("rows")
+    val errors = totals("errors")
+    val processed = rows - errors
+    if (processed > 0) committed.select("name").write.mode("append").parquet(manifestPath)
+    val skipped = counts(seen)("rows") - rows
+    val report = nodes.indices.map(i =>
+      PipelineReport(nodes(i).op, "errors", totals(s"node$i"))) :+
       PipelineReport("_pipeline", "processed", processed) :+
       PipelineReport("_pipeline", "errors", errors) :+
       PipelineReport("_pipeline", "skipped_memoized", skipped)
-    (good, report)
+    (committed, report)
   }
 
-  private def runOnce(clips: DataFrame): (DataFrame, Seq[PipelineReport]) = {
-    val out = nodes.foldLeft(clips) { (df, spec) =>
+  private def chain(clips: DataFrame): DataFrame =
+    nodes.foldLeft(clips) { (df, spec) =>
       OpRegistry.resolve(spec.op).get.apply(df, spec.params)
     }
-    (out, nodes.map(s => PipelineReport(s.op, "bound", 1L)))
+
+  /** The data files under `dir`; None when `dir` does not exist. */
+  private def dataFiles(spark: SparkSession, dir: String): Option[Seq[String]] = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(path)) None
+    else Some(fs.listStatus(path).toSeq.map(_.getPath)
+      .filter(_.getName.startsWith("part-")).map(_.toString))
   }
 }
 

@@ -13,20 +13,28 @@ object CountingResource {
 class ModelOpSpec extends SparkTestBase {
   import spark.implicits._
 
-  test("mapBatches loads the resource once per executor and batches rows") {
+  test("appendBatches loads the resource once per executor, batches rows " +
+    "in place and gives null inputs null outputs") {
     val res = new ModelResource[String] {
       val key = "counting-test"
       def load(): String = { CountingResource.loads.incrementAndGet(); "model" }
     }
-    val schema = StructType(Seq(
-      StructField("id", LongType), StructField("batch_size", IntegerType)))
-    val df = (1L to 10L).toDF("id").repartition(2)
-    val out = ModelOp.mapBatches(df, schema, batchSize = 3, res) { (m, batch) =>
-      assert(m == "model")
-      batch.iterator.map(r => Row(r.getLong(0), batch.size))
-    }.collect()
-    assert(out.length == 10)
-    assert(out.map(_.getInt(1)).forall(_ <= 3))
+    val df = (1L to 10L).map(i => (i, if (i == 4L) null else s"v$i"))
+      .toDF("id", "v").repartition(2)
+    val outFields = Seq(StructField("batch_size", IntegerType),
+      StructField("echo", StringType))
+    val appended = ModelOp.appendBatches(df, Seq("v"), outFields, batchSize = 3, res) {
+      (m, batch) =>
+        assert(m == "model")
+        batch.map(r => Row(batch.size, r.getString(0)))
+    }
+    assert(appended.columns.toSeq == Seq("id", "v", "batch_size", "echo"))
+    val out = appended.collect()
+    assert(out.map(_.getLong(0)).sorted.toSeq == (1L to 10L))
+    out.foreach { r =>
+      if (r.getLong(0) == 4L) assert(r.isNullAt(2) && r.isNullAt(3))
+      else assert(r.getString(3) == r.getString(1) && r.getInt(2) <= 3)
+    }
     // single JVM: computeIfAbsent guarantees exactly one load across threads
     assert(CountingResource.loads.get() == 1)
   }

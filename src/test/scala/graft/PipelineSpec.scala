@@ -1,8 +1,16 @@
 package graft
 
 import java.util.Base64
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.catalyst.plans.logical.{Join, MapPartitions}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
-import graft.plans.{NodeSpec, Pipeline, PipelineValidationError}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.operators.Multimodal
+import graft.plans.{NodeSpec, OpRegistry, Pipeline, PipelineReport, PipelineValidationError}
 import graft.sources.{ClipCatalog, Npy}
 
 /** Pipeline driver, clip catalog, and NPY codec tests. */
@@ -49,6 +57,17 @@ class PipelineSpec extends SparkTestBase {
     // written clips parquet is readable and has both rows (append x2)
     val written = spark.read.parquet(s"$dir/clips")
     assert(written.count() == 4)
+  }
+
+  test("an execute over an empty clip table commits nothing and reports zeros") {
+    // the optimizer prunes both observations of a provably empty plan;
+    // reading them must neither block nor fail
+    val dir = java.nio.file.Files.createTempDirectory("graft-empty").toString
+    val (out, rep) = Pipeline(Seq(NodeSpec("volume"), NodeSpec("blinks")), dir)
+      .execute(spark, clipTable.where(lit(false)))
+    assert(out.count() == 0 && out.columns.contains("blinks"))
+    assert(rep.map(_.count).forall(_ == 0L), s"report: $rep")
+    assert(rep.exists(r => r.node == "_pipeline" && r.status == "skipped_memoized"))
   }
 
   test("the reference's full node graph runs end-to-end with stub models") {
@@ -148,6 +167,170 @@ class PipelineSpec extends SparkTestBase {
     val row = spark.read.parquet(s"$dir/clips")
       .selectExpr("size(src_seq.blinks)").head
     assert(row.getInt(0) == 2) // one blink struct per frame
+  }
+
+  /** A 64x64 single-colour JPEG frame; `seed` picks the colour. */
+  private def frame(seed: Int): Array[Byte] = {
+    val img = new java.awt.image.BufferedImage(64, 64,
+      java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
+    val g = img.createGraphics()
+    g.setColor(new java.awt.Color(seed * 40 % 255, seed * 7 % 255, 150))
+    g.fillRect(0, 0, 64, 64); g.dispose()
+    val baos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "jpeg", baos)
+    baos.toByteArray
+  }
+
+  private def count(rep: Seq[PipelineReport], node: String, status: String): Long =
+    rep.find(r => r.node == node && r.status == status).get.count
+
+  private def names(df: DataFrame): Seq[String] =
+    df.select("name").collect().map(_.getString(0)).toSeq.sorted
+
+  /** Frame seeds in which `StubDetector` finds a face (md5 % 17 != 0)
+    * and one in which it finds none. */
+  private lazy val (face, noFace) = {
+    val (none, some) = (0 until 255).partition(s => Multimodal.md5Long(frame(s)) % 17 == 0)
+    (some, none.head)
+  }
+
+  /** Three clips through detection -> crop -> emoca; `clip_bad` has one
+    * face-less frame. */
+  private lazy val facelessRun = {
+    val clips = Seq(
+      ("clip_ok1", Seq(frame(face(0)), frame(face(1)))),
+      ("clip_bad", Seq(frame(face(2)), frame(noFace))),
+      ("clip_ok2", Seq(frame(face(3))))).toDF("name", "frames")
+    val nodes = Seq(NodeSpec("face_detection"), NodeSpec("best_face"),
+      NodeSpec("transform_bboxes"), NodeSpec("crop", Map("size" -> "32")),
+      NodeSpec("emoca"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-faceless").toString
+    val (_, rep) = Pipeline(nodes, dir).execute(spark, clips)
+    (clips, nodes, dir, rep)
+  }
+
+  test("a face-less frame sends its clip to the error channel; crop -> emoca " +
+    "commits the other clips") {
+    val (_, _, dir, rep) = facelessRun
+    assert(count(rep, "_pipeline", "processed") == 2)
+    assert(count(rep, "_pipeline", "errors") == 1)
+    assert(count(rep, "_pipeline", "skipped_memoized") == 0)
+    val committed = spark.read.parquet(s"$dir/clips")
+    assert(names(committed) == Seq("clip_ok1", "clip_ok2"))
+    assert(names(spark.read.parquet(s"$dir/_manifest")) == Seq("clip_ok1", "clip_ok2"))
+    val sizes = committed.select(col("name"), size(col("frames")),
+      size(col("crops")), size(col("shape"))).collect()
+    assert(sizes.forall(r => r.getInt(1) == r.getInt(2) && r.getInt(1) == r.getInt(3)))
+  }
+
+  test("per-node error counts in the report equal the error channel") {
+    val (clips, nodes, _, rep) = facelessRun
+    val chained = nodes.foldLeft(clips) { (df, s) =>
+      OpRegistry.resolve(s.op).get.apply(df, s.params)
+    }
+    def nulls(s: NodeSpec) =
+      OpRegistry.resolve(s.op).get.outputTypes.map(t => col(t).isNull).reduce(_ || _)
+    val expected = nodes.map(s => s.op -> chained.where(nulls(s)).count())
+    assert(rep.filterNot(_.node == "_pipeline").map(r => r.node -> r.count) == expected)
+    assert(rep.filterNot(_.node == "_pipeline").forall(_.status == "errors"))
+    assert(expected.toMap == Map("face_detection" -> 0L, "best_face" -> 0L,
+      "transform_bboxes" -> 0L, "crop" -> 1L, "emoca" -> 1L))
+    val errorChannel = chained.where(nodes.map(nulls).reduce(_ || _))
+    assert(names(errorChannel) == Seq("clip_bad"))
+    assert(count(rep, "_pipeline", "errors") == errorChannel.count())
+  }
+
+  test("writeReport serializes the per-node and pipeline counts as JSON") {
+    val (_, _, _, rep) = facelessRun
+    val path = java.nio.file.Files.createTempFile("graft-report", ".json")
+    Pipeline.writeReport(rep, path.toString)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(java.nio.file.Files.readString(path))
+    val parsed = json.elements().asScala.map(n => PipelineReport(
+      n.get("node").asText(), n.get("status").asText(), n.get("count").asLong())).toSeq
+    assert(parsed == rep)
+    assert(parsed.contains(PipelineReport("crop", "errors", 1)))
+    assert(parsed.contains(PipelineReport("_pipeline", "processed", 2)))
+  }
+
+  /** The query executions of every action `body` runs. */
+  private def actions(body: => Unit): Seq[QueryExecution] = {
+    org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        seen.add(qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq
+  }
+
+  private def runsNodes(qe: QueryExecution): Boolean =
+    qe.optimizedPlan.collectFirst { case m: MapPartitions => m }.nonEmpty
+
+  private def joins(qe: QueryExecution): Seq[Join] =
+    qe.optimizedPlan.collect { case j: Join => j }
+
+  test("execute runs the node chain in one action with no join back on name; " +
+    "a memoized execute runs no node over any row") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan").toString
+    val input = s"$dir/clips_in"
+    Seq(
+      ("clip_a", Seq(frame(face(0)), frame(face(1))), Seq.tabulate(16000)(i => math.sin(i * 0.001))),
+      ("clip_b", Seq(frame(face(2))), Seq.tabulate(8000)(i => math.cos(i * 0.002))),
+      ("clip_c", Seq(frame(face(3)), frame(face(4)), frame(face(5))),
+        Seq.tabulate(12000)(i => math.sin(i * 0.003))))
+      .toDF("name", "frames", "wav").coalesce(1).write.parquet(input)
+    val roster = Seq(NodeSpec("Wav2vecNode"), NodeSpec("FaceAlignmentNode"),
+      NodeSpec("FixedBboxesNode"), NodeSpec("CropNode", Map("size" -> "32")))
+    val e2e = Seq(NodeSpec("face_detection"), NodeSpec("best_face"),
+      NodeSpec("transform_bboxes"), NodeSpec("crop"), NodeSpec("emoca"),
+      NodeSpec("wav2vec"), NodeSpec("flame"), NodeSpec("render", Map("size" -> "32")))
+    for ((label, nodes) <- Seq("roster" -> roster, "e2e" -> e2e)) {
+      val pipe = Pipeline(nodes, s"$dir/$label")
+      var fresh = Seq.empty[PipelineReport]
+      val freshRuns = actions { fresh = pipe.execute(spark, spark.read.parquet(input))._2 }
+        .filter(runsNodes)
+      assert(freshRuns.size == 1, s"$label: ${freshRuns.size} actions ran the nodes")
+      assert(joins(freshRuns.head).isEmpty,
+        s"$label: join in the fresh plan:\n${freshRuns.head.optimizedPlan}")
+      assert(count(fresh, "_pipeline", "processed") == 3)
+
+      var memo = Seq.empty[PipelineReport]
+      val memoRuns = actions { memo = pipe.execute(spark, spark.read.parquet(input))._2 }
+        .filter(runsNodes)
+      assert(memoRuns.size == 1, s"$label: ${memoRuns.size} actions ran the nodes")
+      assert(joins(memoRuns.head).map(_.joinType) == Seq(LeftAnti),
+        s"$label: memo plan:\n${memoRuns.head.optimizedPlan}")
+      // the observation on top of the chain saw no row; the one on the
+      // input saw every clip
+      val observed = memoRuns.head.observedMetrics.values.map(_.getAs[Long]("rows"))
+      assert(observed.toSeq.sorted == Seq(0L, 3L), s"$label: observed $observed")
+      assert(count(memo, "_pipeline", "skipped_memoized") == 3)
+    }
+    val committed = spark.read.parquet(s"$dir/roster/clips")
+    assert(committed.schema == StructType.fromDDL(
+      "name STRING, frames ARRAY<BINARY>, wav ARRAY<DOUBLE>, " +
+        "wav2vec ARRAY<ARRAY<DOUBLE>>, volume ARRAY<DOUBLE>, " +
+        "landmarks ARRAY<ARRAY<STRUCT<x: DOUBLE, y: DOUBLE>>>, " +
+        "raw_bboxes ARRAY<ARRAY<STRUCT<x1: DOUBLE, y1: DOUBLE, x2: DOUBLE, " +
+        "y2: DOUBLE, score: DOUBLE>>>, " +
+        "bboxes ARRAY<STRUCT<x1: BIGINT, y1: BIGINT, x2: BIGINT, y2: BIGINT>>, " +
+        "crops ARRAY<BINARY>"), committed.schema.treeString)
+    val rows = committed.select(col("name"), size(col("frames")), size(col("crops")),
+      size(col("wav2vec")), size(col("volume"))).collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4)))
+    // wav2vec: int(len * 50 / 16000 - 0.25) frames; volume: one per 320 samples
+    assert(rows.sortBy(_._1).toSeq == Seq(("clip_a", 2, 2, 49, 50),
+      ("clip_b", 1, 1, 24, 25), ("clip_c", 3, 3, 37, 38)))
+    assert(names(spark.read.parquet(s"$dir/roster/_manifest")) ==
+      Seq("clip_a", "clip_b", "clip_c"))
   }
 
   test("pipeline graph JSON parses the reference shape") {
