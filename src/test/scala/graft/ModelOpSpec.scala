@@ -13,8 +13,7 @@ object CountingResource {
 class ModelOpSpec extends SparkTestBase {
   import spark.implicits._
 
-  test("appendBatches loads the resource once per executor, batches rows " +
-    "in place and gives null inputs null outputs") {
+  test("appendBatches loads once per executor, batches rows in place, nulls stay null") {
     val res = new ModelResource[String] {
       val key = "counting-test"
       def load(): String = { CountingResource.loads.incrementAndGet(); "model" }
