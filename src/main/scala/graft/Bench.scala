@@ -1,36 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+/** Full-registry benchmark: every gate, or the gates named in the comma
+  * list `SPARK_GRAFT_BENCH_ONLY`, in one session with a noop sink. Prints
+  * one JSON line on stdout and writes it to `BENCH_LOCAL.json`; stderr
+  * gets each gate's minimum construction time (building the DataFrame,
+  * which runs its eager jobs) and final time (the noop save). */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to every core: the harness only sets SPARK_GRAFT_SF_DIR
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // Tried and REVERTED (r16): minPartitionSize=1b to force AQE's
-      // parallelism-first sizing on sub-MB shuffles — net 16% SLOWER
-      // full-registry (447.8 s vs ~390 s): 32 tasks per tiny post-shuffle
-      // stage cost more in scheduling than the parallelism bought.
-      // Heavy pre-shuffle stages are spread by operators.Spread instead.
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
     // JVM/codegen warmup so the first measured query doesn't absorb startup
     spark.range(1000000).selectExpr("sum(id)").collect()
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    // optional comma-separated name filter: bench a subset in the exact
-    // harness shape (same session, noop sink, 3 interleaved sweeps) —
-    // for isolating whether a query's full-run time carries JVM-ambient
-    // drag from the other gates' checkpointed state
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).toSet)
-    val named = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(q => only.forall(_.contains(q._1)))
+    val gates = SparkEntry.queries
+    val names = Harness.resolve(gates.keys,
+      Harness.names(sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", "")))
     // 3 trials, interleaved round-robin across queries (sweep 1 of all
     // queries, then sweep 2, then sweep 3) rather than back-to-back per
     // query: a transient machine stall then lands inside ONE sweep and
@@ -40,28 +24,32 @@ object Bench {
     // inflating one alphabetical window 5-30x in a prior gate run).
     // Failed trials record no time — a query with zero successful trials
     // reports -1 so breakage is visible instead of masquerading as speed.
-    val times = scala.collection.mutable.Map.empty[String, List[Double]]
+    // Each trial is (construction s, total s).
+    val trials = scala.collection.mutable.Map.empty[String, List[(Double, Double)]]
       .withDefaultValue(Nil)
     // per-sweep totals ride along in the artifact so a machine stall
     // (one sweep far above the others) is distinguishable from a plan
     // regression (all sweeps up together) without any local rerun
     val sweepTotals = Array.fill(3)(0.0)
-    for (sweep <- 0 until 3; (name, fn) <- named) {
+    for (sweep <- 0 until 3; name <- names) {
       val t0 = System.nanoTime()
       // noop sink forces full evaluation of every column (count() would
       // let Spark prune the scan down to row counts).
       try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        val df = gates(name)(spark, sfDir)
+        val t1 = System.nanoTime()
+        df.write.format("noop").mode("overwrite").save()
         val dt = (System.nanoTime() - t0) / 1e9
-        times(name) = dt :: times(name)
+        trials(name) = ((t1 - t0) / 1e9, dt) :: trials(name)
         sweepTotals(sweep) += dt
       } catch {
         case e: Throwable => System.err.println(s"[bench] $name: $e")
       }
     }
-    val results = named.map { case (name, _) =>
-      name -> (if (times(name).isEmpty) -1.0 else times(name).min)
-    }
+    for (name <- names; ts = trials(name) if ts.nonEmpty)
+      System.err.println(f"[bench] $name construct ${ts.map(_._1).min}%.3f s, " +
+        f"final ${ts.map(t => t._2 - t._1).min}%.3f s")
+    val results = names.map(n => n -> trials(n).map(_._2).minOption.getOrElse(-1.0))
     // The driver captures the LAST 2000 chars of output, and sbt's
     // trailing "[success] ..." line eats ~80 of them — the r4 line
     // (full names, full-precision doubles, ~2.5 KB) overflowed and

@@ -1,55 +1,30 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 import java.nio.file.{Files, Paths}
 
 /** Dump `explain("formatted")` for named queries to text files — the
   * optimization rounds' before/after plan evidence
-  * (`plans/r<N>/<query>_<tag>.txt`).
+  * (`plans/r<N>/<qNN>_<tag>.txt`).
   *
-  * Usage: runMain graft.PlanDump <outDir> <tag> <name...|ALL>
-  * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-  *      SPARK_GRAFT_CPUS (default all cores) — same session shape as
-  *      Bench so the dumped plan is the benched plan.
+  * Usage: runMain graft.PlanDump <outDir> <tag> [name...|ALL] — exact
+  * names or unique qNN prefixes; none or ALL dumps every gate. The
+  * session is `Harness.session()`, Bench's, so the dumped plan is the
+  * benched plan.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val outDir = args(0)
-    val tag = args(1)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (outDir, tag) = (args(0), args(1))
+    val sfDir = Harness.sfDir
+    val names = Harness.resolve(Queries.all.keys, args.drop(2).toSeq.filterNot(_ == "ALL"))
+    val spark = Harness.session()
     Files.createDirectories(Paths.get(outDir))
-    val names =
-      if (args.length > 2 && args(2) == "ALL") Queries.all.keys.toSeq.sorted
-      else args.drop(2).toSeq
     names.foreach { name =>
-      // exact name wins; otherwise the qNN prefix must be unambiguous —
-      // keys.find over an unordered Map would resolve an ambiguous
-      // prefix nondeterministically and dump evidence for the wrong query
-      val full = Queries.all.keys.find(_ == name).getOrElse {
-        val matches = Queries.all.keys.filter(_.startsWith(name + "_")).toSeq.sorted
-        require(matches.nonEmpty, s"no query named $name")
-        require(matches.size == 1,
-          s"ambiguous query prefix $name: ${matches.mkString(", ")}")
-        matches.head
-      }
       try {
-        val df = Queries.all(full).impl(spark, sfDir)
-        val txt = df.queryExecution.explainString(FormattedMode)
-        Files.writeString(Paths.get(outDir, s"${full.takeWhile(_ != '_')}_$tag.txt"), txt)
-        System.err.println(s"[plandump] $full -> $outDir (${txt.length} chars)")
+        val txt = Queries.all(name).impl(spark, sfDir).queryExecution.explainString(FormattedMode)
+        Files.writeString(Paths.get(outDir, s"${name.takeWhile(_ != '_')}_$tag.txt"), txt)
+        System.err.println(s"[plandump] $name -> $outDir (${txt.length} chars)")
       } catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[plandump] $full FAILED: $e")
+        System.err.println(s"[plandump] $name FAILED: $e")
       }
     }
     spark.stop()

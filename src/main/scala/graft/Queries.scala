@@ -29,11 +29,12 @@ object Queries {
     val df = s.read.parquet(s"$dir/$name.parquet")
     // The driver's events.ts has shipped as both TIMESTAMP(NANOS) (which
     // Spark reads as nanos-since-epoch longs under the nanosAsLong flag
-    // set by Verify/Bench) and timestamp[us] (which loads as a timestamp
-    // type). Normalize the timestamp vintage to the SAME nanos longs at
-    // the one load boundary, so every ts consumer — session gaps, range
-    // joins, as-of joins — sees one type regardless of testdata vintage.
-    // (Session tz is UTC in every entry point, so the NTZ cast is exact;
+    // that `Harness.session` sets) and timestamp[us] (which loads as a
+    // timestamp type). Normalize the timestamp vintage to the SAME nanos
+    // longs at the one load boundary, so every ts consumer — session
+    // gaps, range joins, as-of joins — sees one type regardless of
+    // testdata vintage. (`Harness.session` sets the session tz to UTC,
+    // so the NTZ cast is exact;
     // the DuckDB oracles read the same file and already convert with
     // epoch_us/epoch_ns, which are vintage-independent by instant.)
     // Allowlisted to the events table: keying on the column name alone
@@ -1629,8 +1630,8 @@ object Queries {
   /** The a2en pack end-to-end (`a2en.py:24-45`): wav2vec resampled
     * per-dimension onto the EMOCA code count (linear_resample_vec), volume
     * resampled likewise, jaw = pose[:, 3], and the 3-D blink ratios from
-    * 68x3 landmarks — the remaining tests-only sink surface, oracle-gated
-    * in the q36 style. The synthetic wav2vec matrix is [v, -v] per sample:
+    * flattened 68x3 landmarks — the remaining tests-only sink surface,
+    * oracle-gated in the q36 style. The synthetic wav2vec matrix is [v, -v] per sample:
     * IEEE negation is exact and distributes over the lerp, so dim 1 must
     * equal -dim 0 bit-for-bit, which the oracle exploits. The landmark
     * geometry (x = name + i, y = 7i mod 13, z = 5i mod 11) makes the blink
@@ -1639,8 +1640,8 @@ object Queries {
     * the kernel's n == num identity short-circuit never fires for num=24. */
   private def q53(s: SparkSession, dir: String): DataFrame = {
     val num = 24
-    val lm3d = array((0 until 68).map(i =>
-      array((col("name") + i).cast("double"),
+    val lm3d = array((0 until 68).flatMap(i =>
+      Seq((col("name") + i).cast("double"),
         lit((i * 7 % 13).toDouble), lit((i * 5 % 11).toDouble))): _*)
     userSeries(s, dir)
       .where(size(col("series")) >= 2)

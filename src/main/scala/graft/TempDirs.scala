@@ -18,7 +18,8 @@ object TempDirs {
   /** A fresh directory under `java.io.tmpdir`, deleted at JVM exit. */
   def create(prefix: String): Path = deleteOnExit(Files.createTempDirectory(prefix))
 
-  private def deleteTree(root: Path): Unit =
+  /** Deletes `root` and everything under it, if it exists. */
+  def deleteTree(root: Path): Unit =
     scala.util.Try(Files.walk(root)).foreach { paths =>
       try paths.sorted(java.util.Comparator.reverseOrder[Path]())
         .forEach(p => scala.util.Try(Files.deleteIfExists(p)))

@@ -1,65 +1,42 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+
+import java.nio.file.Paths
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.ObjectMapper
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [names] — the optional
+  * comma list of exact gate names or unique qNN prefixes restricts the
+  * dump for fast local iteration; the driver passes two arguments. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // args: <sfDir> <outDir> [queryNamePrefixes] — the optional
-    // comma-separated prefixes restrict the dump for fast local
-    // iteration; the driver passes two.
     val (sfDir, outDir) = (args(0), args(1))
-    val prefixes =
-      if (args.length > 2) args(2).split(',').map(_.trim).toSeq
-      else Seq("")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark rejects by
-      // default; read as nanos-since-epoch longs (ordering-compatible).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val gates = SparkEntry.queries
+    val names = Harness.resolve(gates.keys, args.drop(2).flatMap(Harness.names).toSeq)
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(q => prefixes.exists(q._1.startsWith)).foreach { case (name, fn) =>
+    names.foreach { name =>
       val t0 = System.nanoTime()
       try {
         // repartition(1), NOT coalesce(1): coalesce would collapse the whole
         // upstream computation onto a single thread.
-        fn(spark, sfDir).repartition(1).write.mode("overwrite")
+        gates(name)(spark, sfDir).repartition(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         System.err.println(f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1fs")
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // remove any stale result from an earlier run: a leftover parquet
         // would make the oracle compare grade old (possibly passing) data
-        val dir = Paths.get(s"$outDir/$name")
-        if (Files.exists(dir)) {
-          import scala.jdk.CollectionConverters._
-          Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala.foreach(Files.delete)
-        }
+        TempDirs.deleteTree(Paths.get(s"$outDir/$name"))
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql(SparkEntry.oracleSql, outDir)
     spark.stop()
   }
+
+  /** `outDir/oracle_sql.json`: gate name → oracle SQL, one JSON object. */
+  def writeOracleSql(sql: Map[String, String], outDir: String): Unit =
+    new ObjectMapper().writeValue(Paths.get(outDir, "oracle_sql.json").toFile, sql.asJava)
 }

@@ -158,19 +158,17 @@ package object functions {
            ((left + right) / 2).as("average_blink"))
   }
 
-  /** Blink features for one frame's 68x3 landmark matrix — the npy shape
-    * `landmarks3d[frame]` as `array<array<double>>` — with full 3-D point
-    * distances, matching `np.linalg.norm(points[:, a] - points[:, b],
-    * axis=1)` over 3-vectors (`utils.py:51-65` on landmarks3d,
-    * `a2en.py:33-34`). */
+  /** Blink features for one frame's 68x3 landmark matrix, flattened
+    * row-major into one `array<double>` (x0, y0, z0, x1, ...) — the layout
+    * `FlameNode` emits per frame — with full 3-D point distances, matching
+    * `np.linalg.norm(points[:, a] - points[:, b], axis=1)` over 3-vectors
+    * (`utils.py:51-65` on landmarks3d, `a2en.py:33-34`). */
   def blink_features_xyz(frame: Column): Column = {
-    def p(i: Int): Column = element_at(frame, i + 1) // 0-based -> 1-based
-    def d(a: Int, b: Int): Column = {
-      val (pa, pb) = (p(a), p(b))
-      sqrt(pow(element_at(pa, 1) - element_at(pb, 1), 2)
-        + pow(element_at(pa, 2) - element_at(pb, 2), 2)
-        + pow(element_at(pa, 3) - element_at(pb, 3), 2))
-    }
+    // coordinate k of 0-based point i; element_at is 1-based
+    def c(i: Int, k: Int): Column = element_at(frame, 3 * i + k + 1)
+    def d(a: Int, b: Int): Column =
+      sqrt(pow(c(a, 0) - c(b, 0), 2) + pow(c(a, 1) - c(b, 1), 2)
+        + pow(c(a, 2) - c(b, 2), 2))
     val left = (d(37, 41) + d(38, 40)) / (d(36, 39) * 2)
     val right = (d(43, 47) + d(44, 46)) / (d(42, 45) * 2)
     struct(left.as("left_blink"), right.as("right_blink"),

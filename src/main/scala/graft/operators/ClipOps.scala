@@ -66,8 +66,8 @@ object ClipOps {
   def blinks(lm: Column): Column = transform(lm, f => blink_features(f))
 
   /** Per-frame blink features from 3-D landmarks (the npy (T, 68, 3)
-    * shape as array<array<array<double>>>) — the a2en variant
-    * (`a2en.py:33-34`). */
+    * shape with each frame flattened: array<array<double>>, as
+    * `FlameNode` emits it) — the a2en variant (`a2en.py:33-34`). */
   def blinks3d(lm: Column): Column = transform(lm, f => blink_features_xyz(f))
 
   /** Audio volume at 50 Hz from a 16 kHz waveform (`wav2vec/inference.py:94-106`). */

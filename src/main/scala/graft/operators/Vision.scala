@@ -154,7 +154,9 @@ object Vision {
       Res("emoca", encoderId, encoder))(emocaKernel)
 
   /** Tiny deterministic FLAME-shaped asset set (3 verts, 2 joints, one
-    * face) standing in for the published FLAME pickle (`flame.py:43-312`):
+    * face, and FLAME's 68 landmarks as distinct barycentric points on
+    * that face, so the a2en blink reader sees a full 68-point frame)
+    * standing in for the published FLAME pickle (`flame.py:43-312`):
     * any consistent basis exercises the LBS math and the pipeline
     * plumbing; a real asset-backed model plugs in via the same
     * ModelResource without operator changes. Accepts the EMOCA stub's
@@ -167,8 +169,11 @@ object Vision {
     jRegressor = Array(Array(1.0, 0, 0), Array(0, 1.0, 0)),
     parents = Array(-1, 0),
     lbsWeights = Array(Array(1.0, 0), Array(0, 1.0), Array(0.5, 0.5)),
-    lmkFaces = Array(Array(0, 1, 2)),
-    lmkBary = Array(Array(1.0 / 3, 1.0 / 3, 1.0 / 3)))
+    lmkFaces = Array.fill(68)(Array(0, 1, 2)),
+    lmkBary = Array.tabulate(68) { i =>
+      val (a, b) = ((i % 8) / 8.0, (i / 8) / 9.0)
+      Array(1 - a - b, a, b)
+    })
 
   private val flameFields: Seq[StructField] = Seq(
     StructField("verts", ArrayType(ArrayType(DoubleType, false), false)),

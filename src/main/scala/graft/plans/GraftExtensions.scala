@@ -6,14 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import graft.functions._
 
 /** SQL surface for the engine's expression library, registered through the
-  * standard `SparkSessionExtensions` hook:
-  *
-  * {{{
-  *   SparkSession.builder()
-  *     .withExtensions(new GraftExtensions)
-  *     // or: .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-  * }}}
-  *
+  * standard `SparkSessionExtensions` hook: a session built with
+  * `.withExtensions(new GraftExtensions)` or with
+  * `spark.sql.extensions=graft.plans.GraftExtensions`
   * makes the kernels available to pure-SQL users:
   * `SELECT savgol_filter(series, 25, 3) FROM clips`.
   */

@@ -15,16 +15,20 @@ class HarnessContractSpec extends SparkTestBase {
 
   private val sfDir = "/root/testdata/sf0.001"
 
+  /** (gate, output schema), sorted by gate. Constructing a gate runs its
+    * eager jobs, so every gate is built once for both tests; the schema
+    * itself is resolved at plan time. */
+  private lazy val schemas: Seq[(String, StructType)] =
+    Queries.all.toSeq.sortBy(_._1).map { case (name, q) => name -> q.impl(spark, sfDir).schema }
+
   test("no gate query emits Array/Map-typed or nested output columns") {
     assume(new java.io.File(sfDir).isDirectory, s"$sfDir missing")
-    val offenders = Queries.all.toSeq.sortBy(_._1).flatMap { case (name, q) =>
-      // schema resolution is plan-time only — nothing executes
-      val bad = q.impl(spark, sfDir).schema.fields.collect {
+    val offenders = schemas.flatMap { case (name, schema) =>
+      schema.fields.collect {
         case f if f.dataType.isInstanceOf[ArrayType] ||
           f.dataType.isInstanceOf[MapType] ||
           f.dataType.isInstanceOf[StructType] => s"$name.${f.name}: ${f.dataType.simpleString}"
       }
-      bad
     }
     assert(offenders.isEmpty,
       s"gate outputs must be scalar cells (driver pandas sort contract); " +
@@ -35,8 +39,8 @@ class HarnessContractSpec extends SparkTestBase {
     assume(new java.io.File(sfDir).isDirectory, s"$sfDir missing")
     // the driver matches spark/oracle columns by exact name after a
     // by-name sort; mixed-case or spaced names are a silent hash trap
-    val offenders = Queries.all.toSeq.sortBy(_._1).flatMap { case (name, q) =>
-      q.impl(spark, sfDir).schema.fieldNames.collect {
+    val offenders = schemas.flatMap { case (name, schema) =>
+      schema.fieldNames.collect {
         case c if !c.matches("[a-z][a-z0-9_]*") => s"$name.$c"
       }
     }

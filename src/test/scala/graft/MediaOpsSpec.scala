@@ -112,7 +112,7 @@ class MediaOpsSpec extends SparkTestBase {
   }
 
   test("a2en pack aligns audio features onto video frames") {
-    // one frame of 68-point 3-D landmarks (the npy (T, 68, 3) shape)
+    // one frame of 68-point 3-D landmarks, flattened as FlameNode emits it
     val lm3d = Seq.tabulate(68)(i =>
       Seq(i.toDouble, (i * 3 % 7).toDouble, (i * 5 % 11).toDouble))
     val df = Seq((
@@ -120,7 +120,7 @@ class MediaOpsSpec extends SparkTestBase {
       Seq.tabulate(100)(i => Seq(i.toDouble, i * 2.0)),
       Seq.tabulate(100)(_.toDouble),
       Seq(Seq(1.0, 2.0)), Seq(Seq(0.0, 0.0, 0.0, 0.5, 0.0, 0.0)),
-      Seq(lm3d), 30))
+      Seq(lm3d.flatten), 30))
       .toDF("name", "wav2vec", "volume", "exp", "pose", "landmarks3d", "num_frames")
     val packed = Sinks.a2enPack(df).select("a2en.*").head
     assert(packed.getSeq[Seq[Double]](0).length == 30) // audio_features resampled

@@ -120,7 +120,7 @@ class PipelineSpec extends SparkTestBase {
       Seq.tabulate(100)(_.toDouble),                       // volume
       Seq.fill(3)(Seq(1.0, 2.0)),                          // exp: 3 codes
       Seq.fill(3)(Seq(0.0, 0.0, 0.0, 0.5, 0.0, 0.0)),      // pose
-      Seq.fill(3)(lm3d)))                                  // landmarks3d
+      Seq.fill(3)(lm3d.flatten)))                          // landmarks3d
       .toDF("name", "frames", "wav2vec", "volume", "exp", "pose", "landmarks3d")
     val out = graft.plans.OpRegistry.ops("a2en")(df, Map.empty).select("a2en.*").head
     assert(out.getSeq[Seq[Double]](0).length == 3) // audio_features -> |exp|
@@ -137,6 +137,22 @@ class PipelineSpec extends SparkTestBase {
     assert(Set("frames", "wav", "wav2vec", "volume", "landmarks", "raw_bboxes",
       "bboxes", "crops", "shape", "exp", "pose", "cam", "verts", "landmarks3d",
       "render_uv", "render_normal", "a2en", "vid2vid").subsetOf(out))
+    // ... and runs: the clip table carries the frames and wav that the two
+    // ffmpeg nodes would decode, and the rest of the roster executes
+    val clips = Seq(
+      ("clip_a", Seq(frame(face(0)), frame(face(1))),
+        Seq.tabulate(16000)(i => math.sin(i * 0.001))),
+      ("clip_b", Seq(frame(face(2))), Seq.tabulate(8000)(i => math.cos(i * 0.002))))
+      .toDF("name", "frames", "wav")
+    val dir = java.nio.file.Files.createTempDirectory("graft-a2en").toString
+    val (_, rep) = Pipeline(graph.drop(2).map(NodeSpec(_)), dir).execute(spark, clips)
+    assert(count(rep, "_pipeline", "processed") == 2, s"report: $rep")
+    val rows = spark.read.parquet(s"$dir/clips").select(col("a2en"),
+      size(col("exp")), size(col("a2en.average_blink")), col("a2en.average_blink")).collect()
+    assert(rows.length == 2 && rows.forall(r => !r.isNullAt(0)))
+    // one blink ratio per EMOCA code, each a number
+    assert(rows.forall(r => r.getInt(1) == r.getInt(2)))
+    assert(rows.forall(_.getSeq[Double](3).forall(b => !b.isNaN)))
   }
 
   test("alignment-driven branch: face_alignment -> fixed_bboxes -> crop -> src_seq") {

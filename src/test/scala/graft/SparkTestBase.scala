@@ -4,23 +4,16 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared local SparkSession for operator specs. */
+/** Shared local SparkSession for operator specs: `Harness.session(2)`,
+  * which sets UTC and `nanosAsLong` (the driver's events.parquet stores
+  * nanos timestamps; HarnessContractSpec plans every gate query). */
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
 }
 
 object SparkTestBase {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      // the driver's events.parquet stores nanos timestamps; Verify/Bench
-      // set this too (HarnessContractSpec plans every gate query)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val s = Harness.session(2)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
