@@ -1,11 +1,16 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
 /** Full-registry benchmark: every gate, or the gates named in the comma
   * list `SPARK_GRAFT_BENCH_ONLY`, in one session with a noop sink. Prints
   * one JSON line on stdout and writes it to `BENCH_LOCAL.json`; stderr
   * gets each gate's minimum construction time (building the DataFrame,
-  * which runs its eager jobs) and final time (the noop save). */
+  * which runs its eager jobs), the fewest Spark jobs one construction
+  * submitted, and its minimum final time (the noop save). */
 object Bench {
+  private val BuildTag = "graft.bench.construct"
+
   def main(args: Array[String]): Unit = {
     val sfDir = Harness.sfDir
     val spark = Harness.session()
@@ -31,12 +36,24 @@ object Bench {
     // (one sweep far above the others) is distinguishable from a plan
     // regression (all sweeps up together) without any local rerun
     val sweepTotals = Array.fill(3)(0.0)
+    // construction jobs per (gate, sweep): the thread tags a construction
+    // with a local property, which the query-stage jobs AQE submits for
+    // it carry too; the listener bus has delivered every job once the
+    // session stops
+    val constructJobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(BuildTag)))
+          .foreach(constructJobs.merge(_, 1, (a, b) => a + b))
+    })
     for (sweep <- 0 until 3; name <- names) {
       val t0 = System.nanoTime()
       // noop sink forces full evaluation of every column (count() would
       // let Spark prune the scan down to row counts).
       try {
-        val df = gates(name)(spark, sfDir)
+        spark.sparkContext.setLocalProperty(BuildTag, s"$name/$sweep")
+        val df = try gates(name)(spark, sfDir)
+          finally spark.sparkContext.setLocalProperty(BuildTag, null)
         val t1 = System.nanoTime()
         df.write.format("noop").mode("overwrite").save()
         val dt = (System.nanoTime() - t0) / 1e9
@@ -46,9 +63,6 @@ object Bench {
         case e: Throwable => System.err.println(s"[bench] $name: $e")
       }
     }
-    for (name <- names; ts = trials(name) if ts.nonEmpty)
-      System.err.println(f"[bench] $name construct ${ts.map(_._1).min}%.3f s, " +
-        f"final ${ts.map(t => t._2 - t._1).min}%.3f s")
     val results = names.map(n => n -> trials(n).map(_._2).minOption.getOrElse(-1.0))
     // The driver captures the LAST 2000 chars of output, and sbt's
     // trailing "[success] ..." line eats ~80 of them — the r4 line
@@ -84,6 +98,13 @@ object Bench {
     // push it out of the driver's tail capture
     spark.sparkContext.setLogLevel("ERROR")
     spark.stop()
+    def jobs(name: String): Int = (0 until 3)
+      .map(i => Option(constructJobs.get(s"$name/$i")).fold(0)(_.intValue)).min
+    for (name <- names; ts = trials(name) if ts.nonEmpty)
+      System.err.println(f"[bench] $name construct ${ts.map(_._1).min}%.3f s, " +
+        f"${jobs(name)} jobs, final ${ts.map(t => t._2 - t._1).min}%.3f s")
+    System.err.println(s"[bench] construction jobs, fewest per gate, over " +
+      s"${names.size} gates: ${names.map(jobs).sum}")
     println(line)
     System.out.flush()
   }

@@ -25,8 +25,45 @@ object Queries {
 
   final case class Q(impl: (SparkSession, String) => DataFrame, oracle: Option[String])
 
+  // Inferred parquet schemas, per session (weakly referenced, so a
+  // closed session's entries become collectable) and per path. Each
+  // entry carries the (path, length, modification time) of every file
+  // under the path when it was inferred; a rewritten table lists
+  // differently and is inferred again. Reading with the known schema
+  // skips the schema-inference job that `read.parquet` runs per load.
+  private type Listing = Seq[(String, Long, Long)]
+  private val schemas = new java.util.WeakHashMap[SparkSession,
+    java.util.concurrent.ConcurrentHashMap[String,
+      (Listing, org.apache.spark.sql.types.StructType)]]()
+
+  /** `s.read.parquet(path)`, with the inferred schema memoized. */
+  private[graft] def load(s: SparkSession, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+    if (!fs.exists(p)) s.read.parquet(path) // the reader's own error
+    else {
+      val files = Seq.newBuilder[(String, Long, Long)]
+      val it = fs.listFiles(p, true)
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      val listed = files.result()
+      val memo = schemas.synchronized {
+        schemas.computeIfAbsent(s, _ => new java.util.concurrent.ConcurrentHashMap())
+      }
+      val known = Option(memo.get(path)).collect { case (`listed`, sch) => sch }
+      val sch = known.getOrElse {
+        val inferred = s.read.parquet(path).schema
+        memo.put(path, (listed, inferred))
+        inferred
+      }
+      s.read.schema(sch).parquet(path)
+    }
+  }
+
   private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    val df = s.read.parquet(s"$dir/$name.parquet")
+    val df = load(s, s"$dir/$name.parquet")
     // The driver's events.ts has shipped as both TIMESTAMP(NANOS) (which
     // Spark reads as nanos-since-epoch longs under the nanosAsLong flag
     // that `Harness.session` sets) and timestamp[us] (which loads as a
@@ -82,7 +119,7 @@ object Queries {
       make.write.mode("overwrite").parquet(p)
       p
     })
-    s.read.parquet(path)
+    load(s, path)
   }
 
   /** Per-user value series (cents, as doubles) ordered by (ts, event_id) —

@@ -149,9 +149,11 @@ package object functions {
 
   /** Blink features for one frame's 68-point landmarks
     * (array<struct<x,y: double>>, iBUG indexing, 0-based indices as in
-    * `utils.py:57-65`); returns struct<left_blink,right_blink,average_blink>. */
+    * `utils.py:57-65`); returns struct<left_blink,right_blink,average_blink>.
+    * A frame with fewer points reads the missing ones as NULL, so its
+    * blink values are NULL instead of an ANSI index error. */
   def blink_features(frame: Column): Column = {
-    def p(i: Int): Column = element_at(frame, i + 1) // 0-based -> 1-based
+    def p(i: Int): Column = try_element_at(frame, lit(i + 1)) // 0-based -> 1-based
     val left = (point_l2(p(37), p(41)) + point_l2(p(38), p(40))) / (point_l2(p(36), p(39)) * 2)
     val right = (point_l2(p(43), p(47)) + point_l2(p(44), p(46))) / (point_l2(p(42), p(45)) * 2)
     struct(left.as("left_blink"), right.as("right_blink"),
@@ -162,10 +164,11 @@ package object functions {
     * row-major into one `array<double>` (x0, y0, z0, x1, ...) — the layout
     * `FlameNode` emits per frame — with full 3-D point distances, matching
     * `np.linalg.norm(points[:, a] - points[:, b], axis=1)` over 3-vectors
-    * (`utils.py:51-65` on landmarks3d, `a2en.py:33-34`). */
+    * (`utils.py:51-65` on landmarks3d, `a2en.py:33-34`). A frame with
+    * fewer than 68 points gives NULL blink values, as [[blink_features]]. */
   def blink_features_xyz(frame: Column): Column = {
-    // coordinate k of 0-based point i; element_at is 1-based
-    def c(i: Int, k: Int): Column = element_at(frame, 3 * i + k + 1)
+    // coordinate k of 0-based point i; try_element_at is 1-based
+    def c(i: Int, k: Int): Column = try_element_at(frame, lit(3 * i + k + 1))
     def d(a: Int, b: Int): Column =
       sqrt(pow(c(a, 0) - c(b, 0), 2) + pow(c(a, 1) - c(b, 1), 2)
         + pow(c(a, 2) - c(b, 2), 2))

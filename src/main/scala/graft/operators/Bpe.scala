@@ -50,11 +50,9 @@ object Bpe {
             maxVocab: Long = 200000L, maxWordLen: Int = 64): Seq[Merge] = {
     require(merges >= 1 && merges <= 4096,
       s"Bpe.train: merges out of range: $merges")
-    val words = df
+    val (words, _) = Contracts.checkpoint(df
       .select(explode(ws_tokens(col(textCol))).as("__w"))
-      .groupBy(col("__w")).agg(count(lit(1)).as("__c"))
-      .localCheckpoint()
-    Contracts.enforce(words,
+      .groupBy(col("__w")).agg(count(lit(1)).as("__c")),
       Contracts.Bound(count(lit(1)), _ <= maxVocab, m =>
         s"Bpe.train: $m distinct words exceed the driver-collect " +
           s"bound (maxVocab=$maxVocab) — train on a word sample"),

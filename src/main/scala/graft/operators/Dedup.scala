@@ -1037,13 +1037,12 @@ object Dedup {
                          idCol: String, labelCol: String): DataFrame = {
     val lab = labels.select(col(idCol).as("__id"),
       col(labelCol).as("__lb"))
-    val joined = pairs.select(col("id_a"), col("id_b"))
-      .join(lab.select(col("__id").as("id_a"), col("__lb").as("__la")),
-        Seq("id_a"), "left")
-      .join(lab.select(col("__id").as("id_b"), col("__lb").as("__lbb")),
-        Seq("id_b"), "left")
-      .localCheckpoint()
-    Contracts.enforce(joined,
+    val (joined, _) = Contracts.checkpoint(
+      pairs.select(col("id_a"), col("id_b"))
+        .join(lab.select(col("__id").as("id_a"), col("__lb").as("__la")),
+          Seq("id_a"), "left")
+        .join(lab.select(col("__id").as("id_b"), col("__lb").as("__lbb")),
+          Seq("id_b"), "left"),
       Contracts.Bound(sum(when(col("__la").isNull || col("__lbb").isNull,
         1L).otherwise(0L)), _ == 0L, b =>
         s"pairLabelConflicts: $b pairs reference ids missing from the " +
@@ -1160,14 +1159,12 @@ object Dedup {
     // sum could wrap silently at extreme corpus scale — and the fit
     // back into the long output columns is CHECKED loudly.
     val dec = "decimal(38,0)"
-    val masses = perHash
+    val (masses, _) = Contracts.checkpoint(perHash
       .agg(sum(col("__c")).as("n_chunks"),
         count(lit(1)).as("n_distinct"),
         sum(col("__c").cast(dec) * col("__l").cast(dec))
           .as("__tc_dec"),
-        sum(col("__l").cast(dec)).as("__dc_dec"))
-      .localCheckpoint()
-    Contracts.enforce(masses,
+        sum(col("__l").cast(dec)).as("__dc_dec")),
       Contracts.Bound(max(when(
         col("__tc_dec") > lit(Long.MaxValue).cast(dec), 1L)
         .otherwise(0L)), _ == 0L, _ =>
@@ -1219,11 +1216,9 @@ object Dedup {
       Contracts.Bound(max(col("__cnt")), _ <= 1L, m =>
         s"canonicalKeepList: the scores table repeats an id $m times " +
           "— the score join would fan cluster members out"))
-    val j = clusters.select(col(idCol).as("__id"),
+    val (j, _) = Contracts.checkpoint(clusters.select(col(idCol).as("__id"),
         col(clusterCol).as("__c"))
-      .join(sc, Seq("__id"), "left")
-      .localCheckpoint()
-    Contracts.enforce(j,
+      .join(sc, Seq("__id"), "left"),
       Contracts.Bound(sum(when(col("__id").isNull || col("__c").isNull ||
         col("__s").isNull, 1L).otherwise(0L)), _ == 0L, b =>
         s"canonicalKeepList: $b rows carry a NULL id, cluster or " +

@@ -50,15 +50,15 @@ object Graph {
                           scale: Long = 1000000000000L,
                           driverEdgeLimit: Long = 1L << 20): DataFrame = {
     require(iterations >= 1, "pageRankInt needs at least one iteration")
-    val e0 = edges.toDF("src", "dst", "w")
-      .withColumn("w", col("w").cast("long")).localCheckpoint()
     // enforce the documented w > 0 contract in the SAME action that
     // sizes the graph: a node whose out-weights sum to 0 would divide
     // by zero — ArithmeticException on the driver path but an ANSI
     // runtime error (or silent null) on the distributed one; checking
     // here makes both paths reject bad input identically, for free
-    // (one Contracts.enforce job returns the size for the path fork)
-    val Seq(nEdges, _, _) = Contracts.enforce(e0,
+    // (the checkpoint job returns the size for the path fork)
+    val (e0, Seq(nEdges, _, _)) = Contracts.checkpoint(
+      edges.toDF("src", "dst", "w")
+        .withColumn("w", col("w").cast("long")),
       Contracts.read(count(lit(1))),
       Contracts.Bound(sum(when(col("w") <= 0L, 1L).otherwise(0L)),
         _ == 0L, b =>
@@ -383,11 +383,10 @@ object Graph {
       .where(col("u") =!= col("v"))
       .distinct()
       .localCheckpoint()
-    val deg = ce.select(explode(array(col("u"), col("v"))).as("node"))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
     // Σdeg = 2m, so one job sizes both factors of the envelope
-    val Seq(maxDeg, degSum) = Contracts.enforce(deg,
+    val (deg, Seq(maxDeg, degSum)) = Contracts.checkpoint(
+      ce.select(explode(array(col("u"), col("v"))).as("node"))
+        .groupBy(col("node")).agg(count(lit(1)).as("deg")),
       Contracts.read(max(col("deg"))), Contracts.read(sum(col("deg"))))
     require(BigInt(degSum / 2) * BigInt(maxDeg) <= BigInt(1000000000L),
       s"degreeAssortativity: edges x maxDegree = ${degSum / 2} x " +
@@ -438,10 +437,10 @@ object Graph {
                               driverEdgeLimit: Long = 1L << 20,
                               maxSeeds: Long = 1000000L): DataFrame = {
     require(iterations >= 1, "personalizedPageRankInt needs >= 1 iteration")
-    val e0 = edges.toDF("src", "dst").localCheckpoint()
-    val sd = seeds.toDF("node").distinct().localCheckpoint()
-    val Seq(nEdges) = Contracts.enforce(e0, Contracts.read(count(lit(1))))
-    val Seq(nSeeds) = Contracts.enforce(sd,
+    val (e0, Seq(nEdges)) = Contracts.checkpoint(edges.toDF("src", "dst"),
+      Contracts.read(count(lit(1))))
+    val (sd, Seq(nSeeds)) = Contracts.checkpoint(
+      seeds.toDF("node").distinct(),
       Contracts.Bound(count(lit(1)), c => c >= 1 && c <= maxSeeds, c =>
         s"personalizedPageRankInt needs 1..$maxSeeds seeds, got $c"))
     val base = (15L * scale) / (100L * nSeeds)
@@ -793,9 +792,9 @@ object Graph {
         greatest(col("u"), col("v")).as("v"))
       .distinct().localCheckpoint()
     val sym = ce.unionByName(ce.select(col("v").as("u"), col("u").as("v")))
-    val deg = sym.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    Contracts.enforce(deg, Contracts.Bound(max(col("deg")),
+    val (deg, _) = Contracts.checkpoint(
+      sym.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg")),
+      Contracts.Bound(max(col("deg")),
       _ <= maxDegree, d =>
         s"linkPrediction: a node has degree $d > maxDegree=$maxDegree — " +
           "the wedge join fans out as deg^2 per node; cap or sample hub " +

@@ -136,16 +136,16 @@ object RangeJoin {
   def peakConcurrency(df: DataFrame, keyCol: String, startCol: String,
                       endCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // pin the projected input ONCE, then both the guard and the sweep
-    // read the same materialized rows — a non-deterministic or
-    // concurrently-mutated source can no longer pass the check yet
-    // feed different intervals to the sweep (the Contracts.enforce-on-
-    // localCheckpoint discipline the rest of the module uses); NULL
+    // pin the projected input ONCE: the guard observes exactly the rows
+    // the checkpoint materializes and the sweep reads — a
+    // non-deterministic or concurrently-mutated source can no longer
+    // pass the check yet feed different intervals to the sweep (the
+    // Contracts.checkpoint discipline the rest of the module uses); NULL
     // boundaries are rejected in the same job (a NULL start or end
     // would silently vanish from the half-open comparison)
-    val iv = df.select(col(keyCol), col(startCol).as("__s"),
-      col(endCol).as("__e")).localCheckpoint()
-    Contracts.enforce(iv,
+    val (iv, _) = Contracts.checkpoint(
+      df.select(col(keyCol), col(startCol).as("__s"),
+        col(endCol).as("__e")),
       Contracts.Bound(sum(when(col("__s").isNull || col("__e").isNull ||
         col("__s") >= col("__e"), 1L).otherwise(0L)), _ == 0L, b =>
         s"peakConcurrency: $b intervals with NULL boundaries or " +

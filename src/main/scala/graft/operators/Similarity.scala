@@ -1311,13 +1311,12 @@ object Similarity {
                        maxBroadcastRows: Long = 1000000L): DataFrame = {
     require(k >= 1 && k <= 100,
       s"marginBitextMine: k must be in [1, 100], got $k")
-    val tagged = xs.select(col("vec_id"), lit(1L).as("__x"), lit(0L).as("__y"))
-      .unionByName(
-        ys.select(col("vec_id"), lit(0L).as("__x"), lit(1L).as("__y")))
-      .groupBy(col("vec_id"))
-      .agg(sum(col("__x")).as("__nx"), sum(col("__y")).as("__ny"))
-      .localCheckpoint()
-    Contracts.enforce(tagged,
+    val (tagged, _) = Contracts.checkpoint(
+      xs.select(col("vec_id"), lit(1L).as("__x"), lit(0L).as("__y"))
+        .unionByName(
+          ys.select(col("vec_id"), lit(0L).as("__x"), lit(1L).as("__y")))
+        .groupBy(col("vec_id"))
+        .agg(sum(col("__x")).as("__nx"), sum(col("__y")).as("__ny")),
       Contracts.Bound(sum(when(col("__nx") > 0L && col("__ny") > 0L, 1L)
         .otherwise(0L)), _ == 0L, n =>
         s"marginBitextMine: $n vec_ids appear in BOTH sets — brute " +

@@ -37,7 +37,10 @@ object Sinks {
     val fps = fpsCol.cast("double")
     val blinks = col("_a2en_blinks3d")
     df.withColumn("_a2en_blinks3d", ClipOps.blinks3d(col("landmarks3d")))
-      .withColumn("a2en", struct(
+      // a clip with a frame of fewer than 68 landmarks has no blink
+      // series: its a2en is NULL, which sends it to the error channel
+      .withColumn("a2en", when(exists(col("landmarks3d"),
+        f => size(f) < 3 * 68), lit(null)).otherwise(struct(
         when(size(col("wav2vec")) > 0,
           graft.functions.linear_resample_vec(col("wav2vec"), numFrames, fps))
           .as("audio_features"),
@@ -49,7 +52,7 @@ object Sinks {
         col("landmarks3d").as("landmarks3d"),
         transform(blinks, b => b("left_blink")).as("left_blink"),
         transform(blinks, b => b("right_blink")).as("right_blink"),
-        transform(blinks, b => b("average_blink")).as("average_blink")))
+        transform(blinks, b => b("average_blink")).as("average_blink"))))
       .drop("_a2en_blinks3d")
   }
 

@@ -50,10 +50,10 @@ object Stats {
     */
   def rankAuc(df: DataFrame, scoreCol: String, labelCol: String,
               maxDistinctScores: Long = 2000000L): DataFrame = {
-    val hist = scoreHist(df, scoreCol, labelCol).localCheckpoint()
     // U2 ≤ 2n² must stay int64-exact: CHECKED row bound in the same
     // sizing job (n ≤ 2e9 keeps 2n² ≤ 8e18)
-    Contracts.enforce(hist, Contracts.Bound(
+    val (hist, _) = Contracts.checkpoint(scoreHist(df, scoreCol, labelCol),
+      Contracts.Bound(
       sum(col("np") + col("nn")), _ <= 2000000000L, n =>
         s"rankAuc: $n rows exceed the exact-U2 int64 contract " +
           "(n <= 2e9 keeps U2 <= 2n^2 exact) — sample the scored rows " +
@@ -104,11 +104,12 @@ object Stats {
       .agg(sum(when(col(labelCol), 1L).otherwise(0L)).as("np"),
         sum(when(col(labelCol), 0L).otherwise(1L)).as("nn"))
       .localCheckpoint()
-    requireBoundedPerKey(hist, keyCol, maxDistinctPerKey, "rankAucByKey")
     // per-key U2 ≤ 2n² must stay int64-exact (the rankAuc contract,
     // applied per key on the already-materialized histogram)
     Contracts.enforce(
-      hist.groupBy(col(keyCol)).agg(sum(col("np") + col("nn")).as("__n")),
+      hist.groupBy(col(keyCol)).agg(count(lit(1)).as("__k"),
+        sum(col("np") + col("nn")).as("__n")),
+      distinctPerKey(max(col("__k")), maxDistinctPerKey, "rankAucByKey"),
       Contracts.Bound(max(col("__n")), _ <= 2000000000L, n =>
         s"rankAucByKey: a key holds $n rows, exceeding the exact-U2 " +
           "int64 contract (n <= 2e9 per key keeps U2 <= 2n^2 exact) — " +
@@ -156,15 +157,14 @@ object Stats {
   private[graft] def prHist(df: DataFrame, keyCol: String,
                             scoreCol: String, labelCol: String,
                             op: String): DataFrame = {
-    val hist = df
+    val (hist, _) = Contracts.checkpoint(df
       .groupBy(col(keyCol), col(scoreCol).cast("long").as("__s"))
       .agg(sum(when(col(labelCol).cast("boolean"), 1L).otherwise(0L))
         .as("np"),
         count(lit(1)).as("nw"),
         sum(when(col(scoreCol).isNull || col(labelCol).isNull, 1L)
-          .otherwise(0L)).as("__bad"))
-      .localCheckpoint()
-    Contracts.enforce(hist, Contracts.Bound(sum(col("__bad")), _ == 0L,
+          .otherwise(0L)).as("__bad")),
+      Contracts.Bound(sum(col("__bad")), _ == 0L,
       b => s"$op: $b NULL score/label rows — every row needs a " +
         "score and a label; filter explicitly first"))
     hist.drop("__bad")
@@ -632,13 +632,16 @@ object Stats {
                                  maxDistinctPerKey: Long = 2000000L): DataFrame = {
     val hist = df.groupBy(col(keyCol), col(xCol).cast("long").as("__v"))
       .agg(sum(col(wCol).cast("long")).as("__c")).localCheckpoint()
-    requireBoundedPerKey(hist, keyCol, maxDistinctPerKey,
-      "exactGroupWeightedMedianX2")
     // a negative weight breaks cumW monotonicity and silently corrupts
     // the order statistic — check on the materialized histogram (the
     // pageRank w-contract discipline: validate, don't document)
-    Contracts.enforce(hist, Contracts.Bound(min(col("__c")), _ >= 0L, _ =>
-      "exactGroupWeightedMedianX2 requires non-negative weights"))
+    Contracts.enforce(
+      hist.groupBy(col(keyCol))
+        .agg(count(lit(1)).as("__k"), min(col("__c")).as("__m")),
+      distinctPerKey(max(col("__k")), maxDistinctPerKey,
+        "exactGroupWeightedMedianX2"),
+      Contracts.Bound(min(col("__m")), _ >= 0L, _ =>
+        "exactGroupWeightedMedianX2 requires non-negative weights"))
     val w = Window.partitionBy(col(keyCol)).orderBy(col("__v"))
       .rowsBetween(Window.unboundedPreceding, 0)
     hist
@@ -704,16 +707,17 @@ object Stats {
                      maxDistinctPerKey: Long = 2000000L): DataFrame = {
     val hist = df.groupBy(col(keyCol), col(xCol).cast("long").as("__v"))
       .agg(count(lit(1)).as("__c")).localCheckpoint()
-    requireBoundedPerKey(hist, keyCol, maxDistinctPerKey, "exactGroupGini")
-    Contracts.enforce(hist, Contracts.Bound(min(col("__v")), _ >= 0L, _ =>
-      "exactGroupGini requires non-negative values (Gini is undefined " +
-        "for mixed-sign data); shift or absolute-value the column first"))
     // int64 exactness envelope: the pairwise |x_i − x_j| double sum is
     // ≤ n²·maxV per key, and every cumulative term stays under it —
     // sized on the materialized histogram (per-key row count = Σ c)
-    val Seq(maxN, maxV) = Contracts.enforce(
-      hist.groupBy(col(keyCol)).agg(sum(col("__c")).as("__n"),
+    val Seq(_, _, maxN, maxV) = Contracts.enforce(
+      hist.groupBy(col(keyCol)).agg(count(lit(1)).as("__k"),
+        min(col("__v")).as("__lo"), sum(col("__c")).as("__n"),
         max(col("__v")).as("__b")),
+      distinctPerKey(max(col("__k")), maxDistinctPerKey, "exactGroupGini"),
+      Contracts.Bound(min(col("__lo")), _ >= 0L, _ =>
+        "exactGroupGini requires non-negative values (Gini is undefined " +
+          "for mixed-sign data); shift or absolute-value the column first"),
       Contracts.read(max(col("__n"))), Contracts.read(max(col("__b"))))
     require(BigInt(maxN) * BigInt(maxN) * BigInt(maxV) <=
       BigInt("4000000000000000000"),
@@ -1115,10 +1119,10 @@ object Stats {
         sum(when(col(sideCol).cast("boolean"), 0L).otherwise(1L))
           .as("__cb"))
       .localCheckpoint()
-    requireBoundedPerKey(hist, keyCol, maxDistinctPerKey, "ksStatistic")
     Contracts.enforce(
-      hist.groupBy(col(keyCol)).agg(sum(col("__ca")).as("__na"),
-        sum(col("__cb")).as("__nb")),
+      hist.groupBy(col(keyCol)).agg(count(lit(1)).as("__k"),
+        sum(col("__ca")).as("__na"), sum(col("__cb")).as("__nb")),
+      distinctPerKey(max(col("__k")), maxDistinctPerKey, "ksStatistic"),
       Contracts.Bound(max(greatest(col("__na"), col("__nb"))),
         _ <= maxRowsPerSide, m =>
           s"ksStatistic: a key's heavier side holds $m rows, exceeding " +
@@ -1767,7 +1771,7 @@ object Stats {
                          maxDistinctScores: Long = 2000000L): DataFrame = {
     val q = col(microProbCol).cast("long")
     val l = col(labelCol).cast("boolean")
-    val hist = df
+    val (hist, _) = Contracts.checkpoint(df
       .select(q.as("__q"), l.as("__l"))
       .groupBy(col("__q"))
       .agg(count(lit(1)).as("__n"),
@@ -1793,9 +1797,8 @@ object Stats {
           col("__q").cast("string"),
           lit(" outside [0, 1000000] micro-prob — clamp or rescale " +
             "the forecast column to probabilities first"))).isNotNull)
-        .otherwise(lit(true)))
-      .localCheckpoint()
-    Contracts.enforce(hist, Contracts.Bound(count(lit(1)),
+        .otherwise(lit(true))),
+      Contracts.Bound(count(lit(1)),
       _ <= maxDistinctScores, m =>
         s"brierDecomposition: $m distinct forecast values exceeds the " +
           s"bounded-histogram contract (maxDistinctScores=" +
@@ -1860,15 +1863,13 @@ object Stats {
     val qk = q * nBuckets
     val bucket = least(((qk - pmod(qk, lit(1000000L))) / lit(1000000L))
       .cast("long"), lit(nBuckets - 1L).cast("long"))
-    val hist = df
+    val (hist, _) = Contracts.checkpoint(df
       .groupBy(col(keyCol), bucket.as("__b"))
       .agg(count(lit(1)).as("__n"),
         sum(when(l, 1L).otherwise(0L)).as("__y"),
         sum(q.cast(d)).as("__sq"),
         sum(when(q.isNull || l.isNull || q < 0L || q > 1000000L, 1L)
-          .otherwise(0L)).as("__bad"))
-      .localCheckpoint()
-    Contracts.enforce(hist,
+          .otherwise(0L)).as("__bad")),
       Contracts.Bound(sum(col("__bad")), _ == 0L, b =>
         s"expectedCalibrationError: $b NULL or out-of-range rows — " +
           "every row needs a label and a forecast in [0, 1000000] " +
@@ -2182,9 +2183,9 @@ object Stats {
   def kaplanMeier(df: DataFrame, keyCol: String, durationCol: String,
                   eventCol: String,
                   maxDistinctPerKey: Long = 100000L): DataFrame = {
-    val base = df.select(col(keyCol), col(durationCol).cast("long").as("__t"),
-      col(eventCol).cast("boolean").as("__e")).localCheckpoint()
-    Contracts.enforce(base,
+    val (base, _) = Contracts.checkpoint(
+      df.select(col(keyCol), col(durationCol).cast("long").as("__t"),
+        col(eventCol).cast("boolean").as("__e")),
       Contracts.Bound(sum(when(col("__t").isNull || col("__t") < 0L ||
         col("__e").isNull, 1L).otherwise(0L)), _ == 0L, b =>
         s"kaplanMeier: $b rows with NULL/negative duration or NULL " +
@@ -2243,9 +2244,8 @@ object Stats {
     * retentionCohorts discipline). Output: input key/cat/y + loo. */
   def looTargetEncoding(df: DataFrame, idCol: String, catCol: String,
                         yCol: String): DataFrame = {
-    val base = df.select(col(idCol), col(catCol),
-      col(yCol).cast("long").as("__y")).localCheckpoint()
-    Contracts.enforce(base,
+    val (base, _) = Contracts.checkpoint(df.select(col(idCol), col(catCol),
+      col(yCol).cast("long").as("__y")),
       Contracts.Bound(sum(when(col("__y").isNull, 1L).otherwise(0L)),
         _ == 0L, b => s"looTargetEncoding: $b rows with NULL outcome — " +
           "encode only labeled rows (filter or impute first)"))
@@ -2371,10 +2371,19 @@ object Stats {
   private def requireBoundedPerKey(hist: DataFrame, keyCol: String,
                                    limit: Long, op: String): Unit =
     Contracts.boundedPerKey(hist, keyCol, limit, op, "distinct values",
-      "Quantize the column to discrete units, or use the mergeable rank " +
-        "sketch (rq_sketch / rq_quantile, q192 path — no bin bounds needed) " +
-        "or the sketch quantiles / robust outliers (Sketches, q66/q124 " +
-        "paths) for continuous values.")
+      distinctHint)
+
+  /** The [[requireBoundedPerKey]] bound over `stat` (the heaviest key's
+    * distinct-value count), for passes that fuse it with other bounds. */
+  private def distinctPerKey(stat: Column, limit: Long,
+                             op: String): Contracts.Bound =
+    Contracts.perKey(stat, limit, op, "distinct values", distinctHint)
+
+  private val distinctHint =
+    "Quantize the column to discrete units, or use the mergeable rank " +
+      "sketch (rq_sketch / rq_quantile, q192 path — no bin bounds needed) " +
+      "or the sketch quantiles / robust outliers (Sketches, q66/q124 " +
+      "paths) for continuous values."
 
   /** K-ANONYMITY / L-DIVERSITY corpus profile — the pre-publication
     * privacy gate for a training corpus (Sweeney 2002; Machanavajjhala
@@ -2483,19 +2492,16 @@ object Stats {
     require(tMicro >= 0L && tMicro <= 1000000L,
       s"tClosenessProfile: tMicro must be in [0, 1e6], got $tMicro")
     val dec = "decimal(38,0)"
-    val cells = df
+    val (cells, _) = Contracts.checkpoint(df
       .groupBy((quasiCols.map(col) :+ col(sensitiveCol).as("__v")): _*)
-      .agg(count(lit(1)).as("__c"))
-      .localCheckpoint()
-    Contracts.enforce(cells,
+      .agg(count(lit(1)).as("__c")),
       Contracts.Bound(sum(when(col("__v").isNull, 1L).otherwise(0L)),
         _ == 0L, b =>
           s"tClosenessProfile: $b cells carry a NULL sensitive value " +
             "— encode it explicitly first (NULL drops from the " +
             "distribution joins)"))
-    val glob = cells.groupBy(col("__v")).agg(sum(col("__c")).as("__g"))
-      .localCheckpoint()
-    Contracts.enforce(glob,
+    val (glob, _) = Contracts.checkpoint(
+      cells.groupBy(col("__v")).agg(sum(col("__c")).as("__g")),
       Contracts.Bound(count(lit(1)), _ <= 1000000L, v =>
         s"tClosenessProfile: $v distinct sensitive values exceed the " +
           "broadcastable global-table contract (1e6)"))
@@ -2593,25 +2599,22 @@ object Stats {
       case _ => col(sensitiveCol).isNotNull &&
         !(col(sensitiveCol).cast("long").cast(sT) <=> col(sensitiveCol))
     }
-    val cells = df
+    val (cells, _) = Contracts.checkpoint(df
       .groupBy((quasiCols.map(col) :+
         col(sensitiveCol).cast("long").as("__v")): _*)
       .agg(count(lit(1)).as("__c"),
         sum(when(col(sensitiveCol).isNull || nonIntegral, 1L)
-          .otherwise(0L)).as("__bad"))
-      .localCheckpoint()
-    Contracts.enforce(cells,
+          .otherwise(0L)).as("__bad")),
       Contracts.Bound(sum(col("__bad")) +
         sum(when(col("__v").isNull, 1L).otherwise(0L)), _ == 0L, b =>
         s"tClosenessOrdered: $b cells carry NULL or non-integral " +
           "sensitive values (fractional values do NOT truncate-band; " +
           "they reject) — band/encode them explicitly first"))
-    val glob = cells.groupBy(col("__v")).agg(sum(col("__c")).as("__g"))
-      .localCheckpoint()
-    val m = Contracts.enforce(glob,
+    val (glob, Seq(m)) = Contracts.checkpoint(
+      cells.groupBy(col("__v")).agg(sum(col("__c")).as("__g")),
       Contracts.Bound(count(lit(1)), v => v >= 2L && v <= 64L, v =>
         s"tClosenessOrdered: $v distinct sensitive values outside " +
-          "[2, 64] — EMD needs an order and a bounded band grid")).head
+          "[2, 64] — EMD needs an order and a bounded band grid"))
     val nRow = glob.agg(sum(col("__g")).as("__tot"))
     val sizes = cells.groupBy(quasiCols.map(col): _*)
       .agg(sum(col("__c")).as("__n"))
@@ -2696,19 +2699,18 @@ object Stats {
                    maxDistinctPerKey: Long = 2000000L): DataFrame = {
     val side = col(sideCol).cast("boolean")
     val x = col(xCol).cast("long")
-    val hist = df.groupBy(col(keyCol), x.as("__x"))
+    val (hist, _) = Contracts.checkpoint(df.groupBy(col(keyCol), x.as("__x"))
       .agg(sum(when(side, 1L).otherwise(0L)).as("na"),
         sum(when(!side, 1L).otherwise(0L)).as("nb"),
-        sum(when(side.isNull || x.isNull, 1L).otherwise(0L)).as("__bad"))
-      .localCheckpoint()
-    Contracts.enforce(hist,
+        sum(when(side.isNull || x.isNull, 1L).otherwise(0L)).as("__bad")),
       Contracts.Bound(sum(col("__bad")), _ == 0L, b =>
         s"mannWhitneyZ: $b NULL side/value rows — assign every row an " +
           "arm and a metric, or filter explicitly before calling"))
-    requireBoundedPerKey(hist, keyCol, maxDistinctPerKey, "mannWhitneyZ")
     // per-key n ≤ 2e9 keeps U2 ≤ n²/2 int64-exact (the rankAuc bound)
     Contracts.enforce(
-      hist.groupBy(col(keyCol)).agg(sum(col("na") + col("nb")).as("__n")),
+      hist.groupBy(col(keyCol)).agg(count(lit(1)).as("__k"),
+        sum(col("na") + col("nb")).as("__n")),
+      distinctPerKey(max(col("__k")), maxDistinctPerKey, "mannWhitneyZ"),
       Contracts.Bound(max(col("__n")), _ <= 2000000000L, n =>
         s"mannWhitneyZ: a key holds $n rows, exceeding the exact-U2 " +
           "int64 contract (n <= 2e9 per key) — sample the rows per " +
@@ -2772,11 +2774,10 @@ object Stats {
     val s = col(scoreCol).cast("long")
     val calH = cal.groupBy(s.as("__s")).agg(count(lit(1)).as("nc"))
     val testH = test.groupBy(s.as("__s")).agg(count(lit(1)).as("nt"))
-    val merged = calH.join(testH, Seq("__s"), "full_outer")
-      .select(col("__s"), coalesce(col("nc"), lit(0L)).as("nc"),
-        coalesce(col("nt"), lit(0L)).as("nt"))
-      .localCheckpoint()
-    val Seq(ncal, m, _, _) = Contracts.enforce(merged,
+    val (merged, Seq(ncal, m, _, _)) = Contracts.checkpoint(
+      calH.join(testH, Seq("__s"), "full_outer")
+        .select(col("__s"), coalesce(col("nc"), lit(0L)).as("nc"),
+          coalesce(col("nt"), lit(0L)).as("nt")),
       Contracts.read(sum(col("nc"))),
       Contracts.read(sum(col("nt"))),
       Contracts.Bound(count(lit(1)), _ <= maxDistinctScores, n =>
@@ -2844,18 +2845,18 @@ object Stats {
                      xCol: String,
                      maxDistinctPerKey: Long = 2000000L): DataFrame = {
     val x = col(xCol).cast("long")
-    val hist = df.groupBy(col(keyCol), col(grpCol), x.as("__x"))
-      .agg(count(lit(1)).as("c"),
-        sum(when(col(grpCol).isNull || x.isNull, 1L).otherwise(0L))
-          .as("__bad"))
-      .localCheckpoint()
-    Contracts.enforce(hist,
+    val (hist, _) = Contracts.checkpoint(
+      df.groupBy(col(keyCol), col(grpCol), x.as("__x"))
+        .agg(count(lit(1)).as("c"),
+          sum(when(col(grpCol).isNull || x.isNull, 1L).otherwise(0L))
+            .as("__bad")),
       Contracts.Bound(sum(col("__bad")), _ == 0L, b =>
         s"kruskalWallisH: $b NULL group/value rows — assign every row " +
           "a group and a metric, or filter explicitly before calling"))
-    requireBoundedPerKey(hist, keyCol, maxDistinctPerKey, "kruskalWallisH")
     Contracts.enforce(
-      hist.groupBy(col(keyCol)).agg(sum(col("c")).as("__n")),
+      hist.groupBy(col(keyCol))
+        .agg(count(lit(1)).as("__k"), sum(col("c")).as("__n")),
+      distinctPerKey(max(col("__k")), maxDistinctPerKey, "kruskalWallisH"),
       Contracts.Bound(max(col("__n")), _ <= 2000000000L, n =>
         s"kruskalWallisH: a key holds $n rows, exceeding the exact " +
           "doubled-rank-sum int64 contract (n <= 2e9 per key) — sample " +
@@ -2925,12 +2926,10 @@ object Stats {
                        sampleSize: Long,
                        maxStrata: Long = 1000000L): DataFrame = {
     require(sampleSize > 0, s"stratifiedSample: sampleSize $sampleSize")
-    val cnt = df.groupBy(col(stratumCol))
+    val (cnt, Seq(n, _, _)) = Contracts.checkpoint(df.groupBy(col(stratumCol))
       .agg(count(lit(1)).as("__nh"),
         sum(when(col(stratumCol).isNull || col(idCol).isNull, 1L)
-          .otherwise(0L)).as("__bad"))
-      .localCheckpoint()
-    val Seq(n, _, _) = Contracts.enforce(cnt,
+          .otherwise(0L)).as("__bad")),
       Contracts.read(sum(col("__nh"))),
       Contracts.Bound(count(lit(1)), _ <= maxStrata, c =>
         s"stratifiedSample: $c strata exceed the bounded-strata " +
@@ -2944,11 +2943,9 @@ object Stats {
       s"stratifiedSample: sampleSize*N = ${sampleSize * n} exceeds the " +
         "int64 apportionment contract (<= 9e18) — shard the population " +
         "and sample per shard")
-    val quota = cnt
+    val (quota, Seq(baseSum)) = Contracts.checkpoint(cnt
       .withColumn("__base", expr(s"(${sampleSize}L * __nh) div ${n}L"))
-      .withColumn("__rem", (lit(sampleSize) * col("__nh")) % lit(n))
-      .localCheckpoint()
-    val Seq(baseSum) = Contracts.enforce(quota,
+      .withColumn("__rem", (lit(sampleSize) * col("__nh")) % lit(n)),
       Contracts.read(sum(col("__base"))))
     val give = sampleSize - baseSum
     // single-partition rank over the BOUNDED strata table only
@@ -3117,10 +3114,9 @@ object Stats {
       s"poissonBootstrapCI: replicas must be in [8, 64], got $replicas")
     // fanOut: the replica explode multiplies every row `replicas`-fold
     // and md5-hashes each copy — spread a narrow scan before that
-    val proj = Spread.fanOut(df.select(col(keyCol),
+    val (proj, _) = Contracts.checkpoint(Spread.fanOut(df.select(col(keyCol),
       col(idCol).cast("string").as("__id"),
-      col(xCol).cast("long").as("__x"))).localCheckpoint()
-    Contracts.enforce(proj,
+      col(xCol).cast("long").as("__x"))),
       Contracts.Bound(sum(when(col("__id").isNull || col("__x").isNull,
         1L).otherwise(0L)), _ == 0L, b =>
         s"poissonBootstrapCI: $b NULL id/metric rows — filter " +
@@ -3219,12 +3215,11 @@ object Stats {
   private[graft] def countHist(df: DataFrame, keyCols: Seq[String],
                                op: String): DataFrame = {
     require(keyCols.nonEmpty, s"$op needs at least one key column")
-    val agg = df.groupBy(keyCols.map(col): _*)
+    val (agg, _) = Contracts.checkpoint(df.groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("n"),
         sum(when(keyCols.map(c => col(c).isNull).reduce(_ || _), 1L)
-          .otherwise(0L)).as("__bad"))
-      .localCheckpoint()
-    Contracts.enforce(agg, Contracts.Bound(sum(col("__bad")), _ == 0L,
+          .otherwise(0L)).as("__bad")),
+      Contracts.Bound(sum(col("__bad")), _ == 0L,
       b => s"$op: $b rows with a NULL key — NULL keys would " +
         "silently merge under the hash; filter or fill explicitly"))
     agg.drop("__bad")
@@ -3293,15 +3288,13 @@ object Stats {
     val side = col(sideCol).cast("boolean")
     val tcol = col(timeCol).cast("long")
     val ev = col(eventCol).cast("boolean")
-    val hist = df.groupBy(col(keyCol), tcol.as("__t"))
+    val (hist, _) = Contracts.checkpoint(df.groupBy(col(keyCol), tcol.as("__t"))
       .agg(sum(when(side, 1L).otherwise(0L)).as("a1"),
         count(lit(1)).as("atot"),
         sum(when(side && ev, 1L).otherwise(0L)).as("d1"),
         sum(when(ev, 1L).otherwise(0L)).as("d"),
         sum(when(side.isNull || tcol.isNull || ev.isNull, 1L)
-          .otherwise(0L)).as("__bad"))
-      .localCheckpoint()
-    Contracts.enforce(hist,
+          .otherwise(0L)).as("__bad")),
       Contracts.Bound(sum(col("__bad")), _ == 0L, b =>
         s"logRank: $b NULL side/time/event rows — assign every subject " +
           "an arm, a time and an event flag, or filter explicitly"))
@@ -3357,13 +3350,11 @@ object Stats {
                   maxDistinctPerKey: Long = 2000000L): DataFrame = {
     val tcol = col(timeCol).cast("long")
     val ev = col(eventCol).cast("boolean")
-    val hist = df.groupBy(col(keyCol), tcol.as("__t"))
+    val (hist, _) = Contracts.checkpoint(df.groupBy(col(keyCol), tcol.as("__t"))
       .agg(count(lit(1)).as("__atot"),
         sum(when(ev, 1L).otherwise(0L)).as("__d"),
         sum(when(tcol.isNull || ev.isNull, 1L).otherwise(0L))
-          .as("__bad"))
-      .localCheckpoint()
-    Contracts.enforce(hist,
+          .as("__bad")),
       Contracts.Bound(sum(col("__bad")), _ == 0L, b =>
         s"nelsonAalen: $b NULL time/event rows — assign every subject " +
           "a time and an event flag, or filter explicitly"))
@@ -3416,20 +3407,18 @@ object Stats {
   def giniByKey(df: DataFrame, keyCol: String, xCol: String,
                 maxDistinctPerKey: Long = 2000000L): DataFrame = {
     val x = col(xCol).cast("long")
-    val hist = df.groupBy(col(keyCol), x.as("__x"))
+    val (hist, _) = Contracts.checkpoint(df.groupBy(col(keyCol), x.as("__x"))
       .agg(count(lit(1)).as("c"),
-        sum(when(x.isNull || x < 0L, 1L).otherwise(0L)).as("__bad"))
-      .localCheckpoint()
-    Contracts.enforce(hist,
+        sum(when(x.isNull || x < 0L, 1L).otherwise(0L)).as("__bad")),
       Contracts.Bound(sum(col("__bad")), _ == 0L, b =>
         s"giniByKey: $b NULL/negative values — Gini needs a " +
           "nonnegative metric on every row; clamp or filter first"))
-    requireBoundedPerKey(hist, keyCol, maxDistinctPerKey, "giniByKey")
     // n·maxAbs ≤ 1e18 keeps Σx int64-exact per key (the welchT
     // contract) and bounds the decimal rank-weighted sum at ≤ 4e27
     Contracts.enforce(
-      hist.groupBy(col(keyCol))
-        .agg(sum(col("c")).as("__n"), max(col("__x")).as("__m")),
+      hist.groupBy(col(keyCol)).agg(count(lit(1)).as("__k"),
+        sum(col("c")).as("__n"), max(col("__x")).as("__m")),
+      distinctPerKey(max(col("__k")), maxDistinctPerKey, "giniByKey"),
       Contracts.Bound(
         sum(when(col("__n").cast("decimal(38,0)") *
             col("__m").cast("decimal(38,0)") >
@@ -3540,11 +3529,10 @@ object Stats {
     * ([[psiByKey]], [[jsdByKey]]). */
   private[graft] def catHist(df: DataFrame, keyCol: String, catCol: String,
                              out: String, op: String): DataFrame = {
-    val h = df.groupBy(col(keyCol), col(catCol).as("__cat"))
-      .agg(count(lit(1)).as(out),
-        sum(when(col(catCol).isNull, 1L).otherwise(0L)).as("__bad"))
-      .localCheckpoint()
-    Contracts.enforce(h,
+    val (h, _) = Contracts.checkpoint(
+      df.groupBy(col(keyCol), col(catCol).as("__cat"))
+        .agg(count(lit(1)).as(out),
+          sum(when(col(catCol).isNull, 1L).otherwise(0L)).as("__bad")),
       Contracts.Bound(sum(col("__bad")), _ == 0L, n =>
         s"$op: $n NULL category rows — bucket every row explicitly " +
           "(e.g. an 'unknown' category) before calling"))
@@ -3592,10 +3580,10 @@ object Stats {
         coalesce(col("__ca0"), lit(0L)).as("__ca"),
         coalesce(col("__cb0"), lit(0L)).as("__cb"))
       .localCheckpoint()
-    requireBoundedPerKey(joined, keyCol, maxDistinctPerKey, "jsdByKey")
     Contracts.enforce(
-      joined.groupBy(col(keyCol)).agg(sum(col("__ca")).as("__n1"),
-        sum(col("__cb")).as("__n2")),
+      joined.groupBy(col(keyCol)).agg(count(lit(1)).as("__k"),
+        sum(col("__ca")).as("__n1"), sum(col("__cb")).as("__n2")),
+      distinctPerKey(max(col("__k")), maxDistinctPerKey, "jsdByKey"),
       Contracts.Bound(max(greatest(col("__n1"), col("__n2"))),
         _ <= 2000000000L, n =>
           s"jsdByKey: a key holds $n rows on one side, exceeding the " +
@@ -3672,15 +3660,14 @@ object Stats {
     val side = col(sideCol).cast("boolean")
     val y = col(yCol).cast("long")
     val d = "decimal(38,0)"
-    val cells = df.groupBy(col(keyCol), col(stratumCol).as("__st"))
-      .agg(sum(when(!side, 1L).otherwise(0L)).as("__na"),
-        sum(when(side, 1L).otherwise(0L)).as("__nb"),
-        sum(when(!side, y).otherwise(0L).cast(d)).as("__sya"),
-        sum(when(side, y).otherwise(0L).cast(d)).as("__syb"),
-        sum(when(col(stratumCol).isNull || side.isNull || y.isNull,
-          1L).otherwise(0L)).as("__bad"))
-      .localCheckpoint()
-    Contracts.enforce(cells,
+    val (cells, _) = Contracts.checkpoint(
+      df.groupBy(col(keyCol), col(stratumCol).as("__st"))
+        .agg(sum(when(!side, 1L).otherwise(0L)).as("__na"),
+          sum(when(side, 1L).otherwise(0L)).as("__nb"),
+          sum(when(!side, y).otherwise(0L).cast(d)).as("__sya"),
+          sum(when(side, y).otherwise(0L).cast(d)).as("__syb"),
+          sum(when(col(stratumCol).isNull || side.isNull || y.isNull,
+            1L).otherwise(0L)).as("__bad")),
       Contracts.Bound(sum(col("__bad")), _ == 0L, b =>
         s"stratifiedAte: $b NULL stratum/side/metric rows — assign " +
           "every row an arm, a stratum and a metric, or filter " +
@@ -3755,13 +3742,12 @@ object Stats {
   private[graft] def pairHist(df: DataFrame, keyCol: String,
                               srcCol: String, dstCol: String,
                               op: String): DataFrame = {
-    val h = df.groupBy(col(keyCol), col(srcCol).as("__src"),
-        col(dstCol).as("__dst"))
-      .agg(count(lit(1)).as("__c"),
-        sum(when(col(srcCol).isNull || col(dstCol).isNull, 1L)
-          .otherwise(0L)).as("__bad"))
-      .localCheckpoint()
-    Contracts.enforce(h,
+    val (h, _) = Contracts.checkpoint(
+      df.groupBy(col(keyCol), col(srcCol).as("__src"),
+          col(dstCol).as("__dst"))
+        .agg(count(lit(1)).as("__c"),
+          sum(when(col(srcCol).isNull || col(dstCol).isNull, 1L)
+            .otherwise(0L)).as("__bad")),
       Contracts.Bound(sum(col("__bad")), _ == 0L, b =>
         s"$op: $b NULL src/dst transition rows — every transition " +
           "needs both states; filter explicitly first"))
@@ -3836,7 +3822,7 @@ object Stats {
     val wq = bround(col(wCol).cast("double") * scale.toDouble, 0)
       .cast("long")
     val d = "decimal(38,0)"
-    val agg = df
+    val (agg, _) = Contracts.checkpoint(df
       .select(col(keyCol), wq.as("__w"))
       .groupBy(col(keyCol))
       .agg(count(lit(1)).as("n"),
@@ -3844,9 +3830,7 @@ object Stats {
         sum(col("__w").cast(d) * col("__w").cast(d)).as("__s2"),
         max(col("__w")).as("__mw"),
         sum(when(col("__w").isNull || col("__w") < 0L, 1L)
-          .otherwise(0L)).as("__bad"))
-      .localCheckpoint()
-    Contracts.enforce(agg,
+          .otherwise(0L)).as("__bad")),
       Contracts.Bound(sum(col("__bad")), _ == 0L, b =>
         s"weightDiagnostics: $b NULL or negative weights — weights " +
           "must be nonnegative; filter or clamp first"),
@@ -3891,19 +3875,19 @@ object Stats {
                           maxDistinctPerKey: Long = 2000000L): DataFrame = {
     val s = col(scoreCol).cast("long")
     val l = col(labelCol).cast("boolean")
-    val hist = df.groupBy(col(keyCol), s.as("__s"))
-      .agg(count(lit(1)).as("__w"),
-        sum(when(l, 1L).otherwise(0L)).as("__y"),
-        sum(when(s.isNull || l.isNull, 1L).otherwise(0L)).as("__bad"))
-      .localCheckpoint()
-    Contracts.enforce(hist,
+    val (hist, _) = Contracts.checkpoint(
+      df.groupBy(col(keyCol), s.as("__s"))
+        .agg(count(lit(1)).as("__w"),
+          sum(when(l, 1L).otherwise(0L)).as("__y"),
+          sum(when(s.isNull || l.isNull, 1L).otherwise(0L)).as("__bad")),
       Contracts.Bound(sum(col("__bad")), _ == 0L, b =>
         s"isotonicCalibration: $b NULL score/label rows — every row " +
           "needs a score and an outcome; filter explicitly first"))
-    requireBoundedPerKey(hist, keyCol, maxDistinctPerKey,
-      "isotonicCalibration")
     Contracts.enforce(
-      hist.groupBy(col(keyCol)).agg(sum(col("__w")).as("__n")),
+      hist.groupBy(col(keyCol))
+        .agg(count(lit(1)).as("__k"), sum(col("__w")).as("__n")),
+      distinctPerKey(max(col("__k")), maxDistinctPerKey,
+        "isotonicCalibration"),
       Contracts.Bound(max(col("__n")), _ <= 2000000000L, n =>
         s"isotonicCalibration: a key holds $n rows, exceeding the " +
           "exact cross-product int64 contract (n <= 2e9 per key) — " +
@@ -3947,9 +3931,9 @@ object Stats {
                       maxRowsPerKey: Long = 2000000L): DataFrame = {
     require(period >= 3 && period % 2 == 1 && period <= 10001,
       s"seasonalProfile: period must be odd, in [3, 10001], got $period")
-    val proj = df.select(col(keyCol), col(tCol).cast("long").as("__t"),
-      col(xCol).cast("long").as("__x")).localCheckpoint()
-    Contracts.enforce(proj,
+    val (proj, _) = Contracts.checkpoint(
+      df.select(col(keyCol), col(tCol).cast("long").as("__t"),
+        col(xCol).cast("long").as("__x")),
       Contracts.Bound(sum(when(col("__t").isNull || col("__x").isNull,
         1L).otherwise(0L)), _ == 0L, b =>
         s"seasonalProfile: $b NULL order/value rows — every row needs " +
@@ -4016,13 +4000,12 @@ object Stats {
                     hitCol: String,
                     maxItemsPerKey: Long = 2000000L): DataFrame = {
     val hit = col(hitCol).cast("boolean")
-    val cells = df.groupBy(col(keyCol), col(itemCol).as("__i"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(hit, 1L).otherwise(0L)).as("y"),
-        sum(when(col(itemCol).isNull || hit.isNull, 1L).otherwise(0L))
-          .as("__bad"))
-      .localCheckpoint()
-    Contracts.enforce(cells,
+    val (cells, _) = Contracts.checkpoint(
+      df.groupBy(col(keyCol), col(itemCol).as("__i"))
+        .agg(count(lit(1)).as("n"),
+          sum(when(hit, 1L).otherwise(0L)).as("y"),
+          sum(when(col(itemCol).isNull || hit.isNull, 1L).otherwise(0L))
+            .as("__bad")),
       Contracts.Bound(sum(col("__bad")), _ == 0L, b =>
         s"ebShrinkRates: $b NULL item/hit rows — every row needs an " +
           "item and an outcome; filter explicitly first"))
@@ -4079,10 +4062,9 @@ object Stats {
   def leadLagCorrelation(df: DataFrame, keyCol: String, tCol: String,
                          xCol: String, yCol: String, maxLag: Int = 7,
                          maxRowsPerKey: Long = 2000000L): DataFrame = {
-    val proj = df.select(col(keyCol), col(tCol).cast("long").as("__t"),
-      col(xCol).cast("long").as("__x"), col(yCol).cast("long").as("__y"))
-      .localCheckpoint()
-    Contracts.enforce(proj,
+    val (proj, _) = Contracts.checkpoint(
+      df.select(col(keyCol), col(tCol).cast("long").as("__t"),
+        col(xCol).cast("long").as("__x"), col(yCol).cast("long").as("__y")),
       Contracts.Bound(sum(when(col("__t").isNull || col("__x").isNull ||
         col("__y").isNull, 1L).otherwise(0L)), _ == 0L, b =>
         s"leadLagCorrelation: $b NULL order/metric rows — every row " +
@@ -4127,12 +4109,10 @@ object Stats {
     val w = col(doseCol).cast("long")
     val hit = col(hitCol).cast("boolean")
     val d = "decimal(38,0)"
-    val cells = df.groupBy(col(keyCol), w.as("__w"))
+    val (cells, _) = Contracts.checkpoint(df.groupBy(col(keyCol), w.as("__w"))
       .agg(count(lit(1)).as("__n"),
         sum(when(hit, 1L).otherwise(0L)).as("__y"),
-        sum(when(w.isNull || hit.isNull, 1L).otherwise(0L)).as("__bad"))
-      .localCheckpoint()
-    Contracts.enforce(cells,
+        sum(when(w.isNull || hit.isNull, 1L).otherwise(0L)).as("__bad")),
       Contracts.Bound(sum(col("__bad")), _ == 0L, b =>
         s"cochranArmitage: $b NULL dose/hit rows — every row needs an " +
           "ordered dose and an outcome; filter explicitly first"))
@@ -4216,9 +4196,9 @@ object Stats {
   def mannKendall(df: DataFrame, keyCol: String, tCol: String,
                   xCol: String,
                   maxRowsPerKey: Long = 1000000L): DataFrame = {
-    val proj = df.select(col(keyCol), col(tCol).cast("long").as("__t"),
-      col(xCol).cast("long").as("__x")).localCheckpoint()
-    Contracts.enforce(proj,
+    val (proj, _) = Contracts.checkpoint(
+      df.select(col(keyCol), col(tCol).cast("long").as("__t"),
+        col(xCol).cast("long").as("__x")),
       Contracts.Bound(sum(when(col("__t").isNull || col("__x").isNull,
         1L).otherwise(0L)), _ == 0L, b =>
         s"mannKendall: $b NULL order/value rows — every row needs a " +
@@ -4281,9 +4261,9 @@ object Stats {
   def holtSmooth(df: DataFrame, keyCol: String, tCol: String,
                  xCol: String, aShift: Int = 2, gShift: Int = 3,
                  maxRowsPerKey: Long = 2000000L): DataFrame = {
-    val proj = df.select(col(keyCol), col(tCol).cast("long").as("__t"),
-      col(xCol).cast("long").as("__x")).localCheckpoint()
-    Contracts.enforce(proj,
+    val (proj, _) = Contracts.checkpoint(
+      df.select(col(keyCol), col(tCol).cast("long").as("__t"),
+        col(xCol).cast("long").as("__x")),
       Contracts.Bound(sum(when(col("__t").isNull || col("__x").isNull,
         1L).otherwise(0L)), _ == 0L, b =>
         s"holtSmooth: $b NULL order/value rows — every row needs a " +
@@ -4360,9 +4340,9 @@ object Stats {
   def changepointMeanShift(df: DataFrame, keyCol: String, tCol: String,
                            xCol: String,
                            maxRowsPerKey: Long = 2000000L): DataFrame = {
-    val proj = df.select(col(keyCol), col(tCol).cast("long").as("__t"),
-      col(xCol).cast("long").as("__x")).localCheckpoint()
-    Contracts.enforce(proj,
+    val (proj, _) = Contracts.checkpoint(
+      df.select(col(keyCol), col(tCol).cast("long").as("__t"),
+        col(xCol).cast("long").as("__x")),
       Contracts.Bound(sum(when(col("__t").isNull || col("__x").isNull,
         1L).otherwise(0L)), _ == 0L, b =>
         s"changepointMeanShift: $b NULL order/value rows — every row " +
@@ -4442,12 +4422,10 @@ object Stats {
                  r2Col: String,
                  maxDistinctPerKey: Long = 2000000L): DataFrame = {
     val d = "decimal(38,0)"
-    val base = df.groupBy(col(keyCol))
+    val (base, _) = Contracts.checkpoint(df.groupBy(col(keyCol))
       .agg(count(lit(1)).as("n"),
         sum(when(col(r1Col) === col(r2Col), 1L).otherwise(0L))
-          .as("n_agree"))
-      .localCheckpoint()
-    Contracts.enforce(base,
+          .as("n_agree")),
       Contracts.Bound(max(col("n")), _ <= 2000000000L, n =>
         s"cohenKappa: a key holds $n rows, exceeding the exact n^2 " +
           "int64 contract (n <= 2e9 per key) — sample the rows per " +
@@ -4504,13 +4482,12 @@ object Stats {
   def fleissKappa(df: DataFrame, keyCol: String, itemCol: String,
                   catCol: String): DataFrame = {
     val d = "decimal(38,0)"
-    val nic = df.groupBy(col(keyCol), col(itemCol).as("__item"),
-        col(catCol).as("__cat"))
-      .agg(count(lit(1)).as("__c"),
-        sum(when(col(itemCol).isNull || col(catCol).isNull, 1L)
-          .otherwise(0L)).as("__bad"))
-      .localCheckpoint()
-    Contracts.enforce(nic,
+    val (nic, _) = Contracts.checkpoint(
+      df.groupBy(col(keyCol), col(itemCol).as("__item"),
+          col(catCol).as("__cat"))
+        .agg(count(lit(1)).as("__c"),
+          sum(when(col(itemCol).isNull || col(catCol).isNull, 1L)
+            .otherwise(0L)).as("__bad")),
       Contracts.Bound(sum(col("__bad")), _ == 0L, b =>
         s"fleissKappa: $b rating rows carry a NULL item or category — " +
           "bucket them explicitly before calling"))
@@ -4594,7 +4571,7 @@ object Stats {
                                    op: String): DataFrame = {
     val bad = (c: String) => when(col(c).isNull ||
       (col(c) =!= 0L && col(c) =!= 1L), 1L).otherwise(0L)
-    val conf = df.groupBy(col(groupCol))
+    val (conf, _) = Contracts.checkpoint(df.groupBy(col(groupCol))
       .agg(count(lit(1)).as("n"),
         sum(when(col(labelCol) === 1L && col(predCol) === 1L, 1L)
           .otherwise(0L)).as("tp"),
@@ -4604,9 +4581,7 @@ object Stats {
           .otherwise(0L)).as("fn"),
         sum(when(col(labelCol) === 0L && col(predCol) === 0L, 1L)
           .otherwise(0L)).as("tn"),
-        sum(bad(labelCol) + bad(predCol)).as("__bad"))
-      .localCheckpoint()
-    Contracts.enforce(conf,
+        sum(bad(labelCol) + bad(predCol)).as("__bad")),
       Contracts.Bound(sum(col("__bad")), _ == 0L, b =>
         s"$op: $b NULL or non-binary label/prediction " +
           "values — encode both columns as {0, 1} longs first"),
@@ -4678,13 +4653,12 @@ object Stats {
     * over disjoint row sets, so maintainers fold these directly. */
   private[graft] def miCells(df: DataFrame, keyCol: String, xCol: String,
                              yCol: String, op: String): DataFrame = {
-    val cells = df.groupBy(col(keyCol), col(xCol).as("__x"),
-        col(yCol).as("__y"))
-      .agg(count(lit(1)).as("__c"),
-        sum(when(col(xCol).isNull || col(yCol).isNull, 1L)
-          .otherwise(0L)).as("__bad"))
-      .localCheckpoint()
-    Contracts.enforce(cells,
+    val (cells, _) = Contracts.checkpoint(
+      df.groupBy(col(keyCol), col(xCol).as("__x"),
+          col(yCol).as("__y"))
+        .agg(count(lit(1)).as("__c"),
+          sum(when(col(xCol).isNull || col(yCol).isNull, 1L)
+            .otherwise(0L)).as("__bad")),
       Contracts.Bound(sum(col("__bad")), _ == 0L, b =>
         s"$op: $b rows carry a NULL category — bucket " +
           "them explicitly (e.g. an 'unknown' value) before calling"))
@@ -4696,10 +4670,10 @@ object Stats {
   private[graft] def miFromCells(cells: DataFrame, keyCol: String,
                                  maxDistinctPerKey: Long): DataFrame = {
     val d = "decimal(38,0)"
-    requireBoundedPerKey(cells, keyCol, maxDistinctPerKey,
-      "mutualInfoByKey")
     Contracts.enforce(
-      cells.groupBy(col(keyCol)).agg(sum(col("__c")).as("__n")),
+      cells.groupBy(col(keyCol))
+        .agg(count(lit(1)).as("__k"), sum(col("__c")).as("__n")),
+      distinctPerKey(max(col("__k")), maxDistinctPerKey, "mutualInfoByKey"),
       Contracts.Bound(max(col("__n")), _ <= 2000000000L, n =>
         s"mutualInfoByKey: a key holds $n rows, exceeding the exact " +
           "micro-log contract (n <= 2e9 per key) — sample first"))
@@ -4822,13 +4796,12 @@ object Stats {
     val m = scoreCols.length
     require(m >= 2 && m <= 16,
       s"labelNoiseJoint needs 2..16 classes, got $m")
-    val base = df.select(col(labelCol).cast("long").as("__y") +:
-      scoreCols.map(c => col(c).cast("long").as(s"__s$c")): _*)
-      .localCheckpoint()
     val scoreNull = scoreCols.map(c => col(s"__s$c").isNull ||
       col(s"__s$c") < 0L || col(s"__s$c") > 1000000000L)
       .reduce(_ || _)
-    Contracts.enforce(base,
+    val (base, _) = Contracts.checkpoint(
+      df.select(col(labelCol).cast("long").as("__y") +:
+        scoreCols.map(c => col(c).cast("long").as(s"__s$c")): _*),
       Contracts.Bound(sum(when(col("__y").isNull || col("__y") < 0L ||
         col("__y") >= m.toLong || scoreNull, 1L).otherwise(0L)),
         _ == 0L, b =>
@@ -4897,13 +4870,12 @@ object Stats {
                         catCol: String): DataFrame = {
     val d = "decimal(38,0)"
     val L = 5354228880L // lcm(1..24)
-    val nic = df.groupBy(col(keyCol), col(itemCol).as("__item"),
-        col(catCol).as("__cat"))
-      .agg(count(lit(1)).as("__c"),
-        sum(when(col(itemCol).isNull || col(catCol).isNull, 1L)
-          .otherwise(0L)).as("__bad"))
-      .localCheckpoint()
-    Contracts.enforce(nic,
+    val (nic, _) = Contracts.checkpoint(
+      df.groupBy(col(keyCol), col(itemCol).as("__item"),
+          col(catCol).as("__cat"))
+        .agg(count(lit(1)).as("__c"),
+          sum(when(col(itemCol).isNull || col(catCol).isNull, 1L)
+            .otherwise(0L)).as("__bad")),
       Contracts.Bound(sum(col("__bad")), _ == 0L, b =>
         s"krippendorffAlpha: $b rating rows carry a NULL item or " +
           "category — bucket them explicitly before calling"))
@@ -4972,13 +4944,11 @@ object Stats {
     * Output: (rater, n_ratings, n_matches, acc_micro). */
   def raterAccuracy(df: DataFrame, itemCol: String, raterCol: String,
                     catCol: String): DataFrame = {
-    val nic = df.groupBy(col(itemCol).as("__item"),
+    val (nic, _) = Contracts.checkpoint(df.groupBy(col(itemCol).as("__item"),
         col(catCol).as("__cat"))
       .agg(count(lit(1)).as("__c"),
         sum(when(col(itemCol).isNull || col(raterCol).isNull ||
-          col(catCol).isNull, 1L).otherwise(0L)).as("__bad"))
-      .localCheckpoint()
-    Contracts.enforce(nic,
+          col(catCol).isNull, 1L).otherwise(0L)).as("__bad")),
       Contracts.Bound(sum(col("__bad")), _ == 0L, b =>
         s"raterAccuracy: $b rating rows carry a NULL item, rater or " +
           "category — bucket them explicitly before calling"),
@@ -5041,7 +5011,7 @@ object Stats {
     val w = least(call_function("div", lit(1000000000000L),
       greatest(col(propMicroCol), lit(1L))), lit(weightCap))
     val matched = col(actionCol) === col(targetCol)
-    val base = df.groupBy(col(keyCol))
+    val (base, _) = Contracts.checkpoint(df.groupBy(col(keyCol))
       .agg(count(lit(1)).as("n"),
         sum(when(matched, 1L).otherwise(0L)).as("n_matched"),
         sum(when(matched, w).otherwise(0L).cast(d)).as("__sw"),
@@ -5055,9 +5025,7 @@ object Stats {
         sum(when(col(propMicroCol).isNull ||
           col(propMicroCol) < 1L || col(propMicroCol) > 1000000L ||
           col(rewardCol).isNull || col(actionCol).isNull ||
-          col(targetCol).isNull, 1L).otherwise(0L)).as("__bad"))
-      .localCheckpoint()
-    Contracts.enforce(base,
+          col(targetCol).isNull, 1L).otherwise(0L)).as("__bad")),
       Contracts.Bound(sum(col("__bad")), _ == 0L, b =>
         s"ipsEstimate: $b rows carry NULLs or a propensity outside " +
           "[1, 1e6] micro — a zero/NULL propensity has unbounded " +
@@ -5109,14 +5077,13 @@ object Stats {
     require(quantiles.nonEmpty && quantiles.forall(q =>
       q._2 >= 1 && q._1 >= 1 && q._1 <= q._2),
       "quantileTreatmentEffects needs proper quantile rationals")
-    val hist = df.groupBy(col(keyCol), col(armCol).as("__arm"),
-        col(xCol).cast("long").as("__v"))
-      .agg(count(lit(1)).as("__c"),
-        sum(when(col(armCol).isNull ||
-          (col(armCol) =!= 0L && col(armCol) =!= 1L), 1L)
-          .otherwise(0L)).as("__bad"))
-      .localCheckpoint()
-    Contracts.enforce(hist,
+    val (hist, _) = Contracts.checkpoint(
+      df.groupBy(col(keyCol), col(armCol).as("__arm"),
+          col(xCol).cast("long").as("__v"))
+        .agg(count(lit(1)).as("__c"),
+          sum(when(col(armCol).isNull ||
+            (col(armCol) =!= 0L && col(armCol) =!= 1L), 1L)
+            .otherwise(0L)).as("__bad")),
       Contracts.Bound(sum(col("__bad")), _ == 0L, b =>
         s"quantileTreatmentEffects: $b rows carry a NULL or non-binary " +
           "arm — encode treatment as {0, 1} longs first"))
@@ -5178,16 +5145,15 @@ object Stats {
   def covariateBalance(df: DataFrame, keyCol: String, armCol: String,
                        xCol: String): DataFrame = {
     val d = "decimal(38,0)"
-    val a = df.groupBy(col(keyCol), col(armCol).as("__arm"))
-      .agg(count(lit(1)).as("__n"),
-        sum(col(xCol).cast(d)).as("__s"),
-        sum(col(xCol).cast(d) * col(xCol).cast(d)).as("__s2"),
-        max(abs(col(xCol))).as("__mx"),
-        sum(when(col(armCol).isNull ||
-          (col(armCol) =!= 0L && col(armCol) =!= 1L) ||
-          col(xCol).isNull, 1L).otherwise(0L)).as("__bad"))
-      .localCheckpoint()
-    Contracts.enforce(a,
+    val (a, _) = Contracts.checkpoint(
+      df.groupBy(col(keyCol), col(armCol).as("__arm"))
+        .agg(count(lit(1)).as("__n"),
+          sum(col(xCol).cast(d)).as("__s"),
+          sum(col(xCol).cast(d) * col(xCol).cast(d)).as("__s2"),
+          max(abs(col(xCol))).as("__mx"),
+          sum(when(col(armCol).isNull ||
+            (col(armCol) =!= 0L && col(armCol) =!= 1L) ||
+            col(xCol).isNull, 1L).otherwise(0L)).as("__bad")),
       Contracts.Bound(sum(col("__bad")), _ == 0L, b =>
         s"covariateBalance: $b rows carry a NULL value or a NULL/" +
           "non-binary arm — encode treatment as {0, 1} longs first"),
@@ -5238,13 +5204,11 @@ object Stats {
     * Output one row: (n_rows, n_clusters, n_pure, purity_micro). */
   def clusterPurity(df: DataFrame, clusterCol: String,
                     labelCol: String): DataFrame = {
-    val cl = df.groupBy(col(clusterCol).as("__cl"),
+    val (cl, _) = Contracts.checkpoint(df.groupBy(col(clusterCol).as("__cl"),
         col(labelCol).as("__lb"))
       .agg(count(lit(1)).as("__c"),
         sum(when(col(clusterCol).isNull || col(labelCol).isNull, 1L)
-          .otherwise(0L)).as("__bad"))
-      .localCheckpoint()
-    Contracts.enforce(cl,
+          .otherwise(0L)).as("__bad")),
       Contracts.Bound(sum(col("__bad")), _ == 0L, b =>
         s"clusterPurity: $b rows carry a NULL cluster or label — " +
           "bucket them explicitly before calling"),
@@ -5416,15 +5380,13 @@ object Stats {
   private[graft] def sprtCounts(df: DataFrame, keyCol: String,
                                 successCol: String,
                                 op: String): DataFrame = {
-    val base = df.groupBy(col(keyCol))
+    val (base, _) = Contracts.checkpoint(df.groupBy(col(keyCol))
       .agg(count(lit(1)).as("n"),
         sum(when(col(successCol) === 1L, 1L).otherwise(0L))
           .as("successes"),
         sum(when(col(successCol).isNull ||
           (col(successCol) =!= 0L && col(successCol) =!= 1L), 1L)
-          .otherwise(0L)).as("__bad"))
-      .localCheckpoint()
-    Contracts.enforce(base,
+          .otherwise(0L)).as("__bad")),
       Contracts.Bound(sum(col("__bad")), _ == 0L, b =>
         s"$op: $b NULL or non-binary outcome values — " +
           "encode the outcome as {0, 1} longs first"),
@@ -5500,13 +5462,12 @@ object Stats {
       BigDecimal.valueOf(1e6 * math.log(2.0) /
         math.log((i + 1).toDouble))
         .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong)
-    val all = df.select(col(queryCol), col(rankCol).cast("long")
-        .as("__r"), col(relCol).cast("long").as("__rel"))
-      .localCheckpoint()
     // Validity is CHECKED on the UNFILTERED projection: a NULL rank
     // compared against k is NULL, so filtering first would silently
     // drop exactly the rows this contract promises to reject loudly.
-    Contracts.enforce(all,
+    val (all, _) = Contracts.checkpoint(
+      df.select(col(queryCol), col(rankCol).cast("long")
+          .as("__r"), col(relCol).cast("long").as("__rel")),
       Contracts.Bound(sum(when(col("__r").isNull || col("__r") < 1L ||
         col("__rel").isNull || col("__rel") < 0L ||
         col("__rel") > 1000L, 1L).otherwise(0L)), _ == 0L, b =>
@@ -5569,9 +5530,9 @@ object Stats {
     * n_triads, n_cycles, cycle_rate_micro). */
   def preferenceCycles(contests: DataFrame, winCol: String,
                        loseCol: String): DataFrame = {
-    val c = contests.select(col(winCol).cast("string").as("__w"),
-      col(loseCol).cast("string").as("__l")).localCheckpoint()
-    Contracts.enforce(c,
+    val (c, _) = Contracts.checkpoint(
+      contests.select(col(winCol).cast("string").as("__w"),
+        col(loseCol).cast("string").as("__l")),
       Contracts.Bound(sum(when(col("__w").isNull || col("__l").isNull ||
         col("__w") === col("__l"), 1L).otherwise(0L)), _ == 0L, b =>
         s"preferenceCycles: $b NULL or self-beating contests — filter " +
@@ -5656,9 +5617,9 @@ object Stats {
                             rounds: Int = 10): DataFrame = {
     require(rounds >= 1 && rounds <= 32,
       s"bradleyTerryStrengths: rounds must be in [1, 32], got $rounds")
-    val c = contests.select(col(winCol).cast("string").as("__w"),
-      col(loseCol).cast("string").as("__l")).localCheckpoint()
-    Contracts.enforce(c,
+    val (c, _) = Contracts.checkpoint(
+      contests.select(col(winCol).cast("string").as("__w"),
+        col(loseCol).cast("string").as("__l")),
       Contracts.Bound(sum(when(col("__w").isNull || col("__l").isNull ||
         col("__w") === col("__l"), 1L).otherwise(0L)), _ == 0L, b =>
         s"bradleyTerryStrengths: $b NULL or self-beating contests — " +
@@ -5666,11 +5627,9 @@ object Stats {
       Contracts.Bound(count(lit(1)), _ <= 2000000000L, n =>
         s"bradleyTerryStrengths: $n contests exceed the exact-count " +
           "contract (2e9)"))
-    val items = c.select(col("__w").as("__it"))
+    val (items, _) = Contracts.checkpoint(c.select(col("__w").as("__it"))
       .unionByName(c.select(col("__l").as("__it")))
-      .groupBy(col("__it")).agg(count(lit(1)).as("__c"))
-      .localCheckpoint()
-    Contracts.enforce(items,
+      .groupBy(col("__it")).agg(count(lit(1)).as("__c")),
       Contracts.Bound(count(lit(1)), _ <= 256L, k =>
         s"bradleyTerryStrengths: $k distinct items exceed the " +
           "driver-recurrence contract (<= 256) — bucket items first"))

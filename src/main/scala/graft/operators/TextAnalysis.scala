@@ -2891,11 +2891,11 @@ object TextAnalysis {
                          maxBatches: Long): DataFrame = {
     val newTypes = firstSeen.groupBy(col("batch"))
       .agg(count(lit(1)).as("new_types"))
-    val curve = perBatch.join(newTypes, Seq("batch"), "left")
-      .select(col("batch"), col("n_tokens"),
-        coalesce(col("new_types"), lit(0L)).as("new_types"))
-      .localCheckpoint() // bounded per-batch table; the guard reuses it
-    Contracts.enforce(curve, Contracts.Bound(count(lit(1)),
+    val (curve, _) = Contracts.checkpoint(
+      perBatch.join(newTypes, Seq("batch"), "left")
+        .select(col("batch"), col("n_tokens"),
+          coalesce(col("new_types"), lit(0L)).as("new_types")),
+      Contracts.Bound(count(lit(1)),
       _ <= maxBatches, b =>
         s"vocabGrowth: $b batches exceed maxBatches=$maxBatches — the " +
           "cumulative windows sort the batch table, which must stay " +
@@ -2926,13 +2926,12 @@ object TextAnalysis {
     require(maxWordLen >= 1 && maxWordLen <= 99,
       s"unigram: maxWordLen must be in [1, 99] (enc packing), got " +
         s"$maxWordLen")
-    val words = df
+    val (words, _) = Contracts.checkpoint(df
       .select(explode(ws_tokens(col(textCol))).as("word"))
       .where(length(col("word")) <= maxWordLen)
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-      .withColumn("len", length(col("word")))
-      .localCheckpoint()
-    Contracts.enforce(words, Contracts.Bound(count(lit(1)),
+      .withColumn("len", length(col("word"))),
+      Contracts.Bound(count(lit(1)),
       _ <= maxDistinctWords, m =>
         s"unigram: $m distinct words exceed the vocabulary-bounded " +
           s"contract (maxDistinctWords=$maxDistinctWords) — normalize " +
@@ -3124,9 +3123,9 @@ object TextAnalysis {
                              maxDocsPerKey: Long = 20000L): DataFrame = {
     require(capacity >= 1L,
       s"packFirstFitDecreasing: capacity must be >= 1, got $capacity")
-    val rows = df.select(col(keyCol), col(idCol).as("__id"),
-      col(tokCol).cast("long").as("__tok")).localCheckpoint()
-    Contracts.enforce(rows,
+    val (rows, _) = Contracts.checkpoint(
+      df.select(col(keyCol), col(idCol).as("__id"),
+        col(tokCol).cast("long").as("__tok")),
       Contracts.Bound(sum(when(col("__id").isNull || col("__tok").isNull ||
         col("__tok") < 1L || col("__tok") > capacity, 1L).otherwise(0L)),
         _ == 0L, b =>
@@ -3198,9 +3197,9 @@ object TextAnalysis {
       greatest(lit(1L),
         size(regexp_extract_all(t, lit("[aeiouy]+"), lit(0)))
           .cast("long")))
-    val out = df.select(col(idCol), w.as("words"), s.as("sentences"),
-      y.as("syllables")).localCheckpoint()
-    Contracts.enforce(out,
+    val (out, _) = Contracts.checkpoint(
+      df.select(col(idCol), w.as("words"), s.as("sentences"),
+        y.as("syllables")),
       Contracts.Bound(max(col("words")), _ <= 1000000L, m =>
         s"readabilityProfile: a document holds $m words, exceeding " +
           "the exact int64 score contract (1e6 words per doc) — " +

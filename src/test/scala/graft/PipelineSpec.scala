@@ -127,6 +127,26 @@ class PipelineSpec extends SparkTestBase {
     assert(out.getSeq[Double](1).length == 3)      // volume -> |exp|, not 5
   }
 
+  test("short landmark frames send their clip to the a2en error channel") {
+    def clip(name: String, points: Int) = (name,
+      Seq.fill(3)(Array[Byte](1, 2)),                      // frames
+      Seq.tabulate(150)(i => Seq(i.toDouble, i * 2.0)),    // wav2vec @50Hz
+      Seq.tabulate(150)(_.toDouble),                       // volume
+      Seq.fill(3)(Seq(1.0, 2.0)),                          // exp
+      Seq.fill(3)(Seq(0.0, 0.0, 0.0, 0.5, 0.0, 0.0)),      // pose
+      Seq.fill(3)(Seq.tabulate(points)(i =>                // landmarks3d
+        Seq(i.toDouble, (i * 3 % 7).toDouble, (i * 5 % 11).toDouble)).flatten))
+    val clips = Seq(clip("clip_ok", 68), clip("clip_short", 1))
+      .toDF("name", "frames", "wav2vec", "volume", "exp", "pose", "landmarks3d")
+    val dir = java.nio.file.Files.createTempDirectory("graft-a2en-short").toString
+    val (_, rep) = Pipeline(Seq(NodeSpec("A2enDatasetNode")), dir).execute(spark, clips)
+    assert(count(rep, "_pipeline", "processed") == 1, s"report: $rep")
+    assert(count(rep, "_pipeline", "errors") == 1, s"report: $rep")
+    assert(count(rep, "A2enDatasetNode", "errors") == 1, s"report: $rep")
+    assert(names(spark.read.parquet(s"$dir/clips")) == Seq("clip_ok"))
+    assert(names(spark.read.parquet(s"$dir/_manifest")) == Seq("clip_ok"))
+  }
+
   test("the reference's a2en+vid2vid config graph binds under class-name aliases") {
     // node roster of configs/mead_a2en_vid2vid.json, verbatim class names
     val graph = Seq("VideoToImagesNode", "VideoToWavNode", "Wav2vecNode",
