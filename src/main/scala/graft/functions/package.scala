@@ -98,10 +98,6 @@ package object functions {
     bbox(b("x1") - pad, b("y1") - pad, b("x2") + pad, b("y2") + pad, b("conf"))
   }
 
-  /** Pad by absolute pixels; ref `utils.py:42-50` (int branch). */
-  def bbox_pad_abs(b: Column, pad: Column): Column =
-    bbox(b("x1") - pad, b("y1") - pad, b("x2") + pad, b("y2") + pad, b("conf"))
-
   /** Integerize preserving width/height; conf -> round(conf*100); ref `utils.py:7-24`.
     * Returns struct<x1,y1,x2,y2,conf: long>. */
   def bbox_to_integer(b: Column): Column = {
@@ -444,9 +440,8 @@ package object functions {
   def dhash_bands(matrix: Column): Column =
     ExprBridge.column(DHashBands(col2expr(matrix)))
 
-  /** MinHash base hash: md5_long reduced mod the Mersenne prime 2^31-1. */
+  /** MinHash hashes are reduced mod the Mersenne prime 2^31-1. */
   val MinhashPrime = 2147483647L
-  def minhash_base(s: Column): Column = pmod(md5_long(s), lit(MinhashPrime))
 
   /** Deterministic permutation constants (a, b) for minhash; fixed seed so
     * Spark and the SQL oracle agree. */

@@ -58,16 +58,6 @@ object Dedup {
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
 
-  /** Per-doc shingle hash sets: set ops over longs are ~10x cheaper than
-    * over strings, and the pair-level Jaccard is computed on hashes on BOTH
-    * engines (so 60-bit collisions, if any, affect both identically). */
-  def shingleHashSets(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    shingleSets(df, idCol, textCol, n)
-      .select(col("doc_id"), transform(col("shingles"), s => md5_long(s)).as("hashes"))
-
-  /** MinHash + LSH near-duplicate pairs: band-bucket candidate generation,
-    * then exact Jaccard verification at `threshold`. numPerms = bands * rowsPerBand.
-    */
   /** Banded minhash signatures: (doc_id, band, band_sig) — the LSH bucket
     * keys. Band keys in ONE pass: array_chunks evaluates the signature
     * exactly once (a transform(sequence..., slice(sig)) lambda would

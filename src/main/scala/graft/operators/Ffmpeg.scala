@@ -3,20 +3,20 @@ package graft.operators
 import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.types._
 
-/** Shell-out transcode operators — the reference's ffmpeg nodes
+/** Shell-out transcode nodes — the reference's ffmpeg nodes
   * (`dpl/processor/nodes/ffmpeg.py:13-46`: video->frames, video->wav,
-  * aac->wav, frames->video) and its OpenCV fps probe
-  * (`dpl/common.py:30-32`), as mapPartitions over binary columns.
+  * aac->wav) and its OpenCV fps probe (`dpl/common.py:30-32`) — as
+  * kernels that append their output column to the row they read
+  * ([[ModelOp.appendBatches]]), like every other clip node.
   *
-  * Each partition writes payloads to temp files, shells out with the SAME
-  * CLI flags as the reference, and reads results back; joblib process
-  * pools (`ffmpeg.py:77-78`) are subsumed by partition parallelism. When
-  * the binaries are absent (this container has none), ops return null
-  * payloads routed to the error channel — the orchestration is real and
-  * tested, the codec is environmental.
+  * Each row's payload goes to a temp file, the binary runs with the SAME
+  * CLI flags as the reference, and the result is read back; joblib
+  * process pools (`ffmpeg.py:77-78`) are subsumed by partition
+  * parallelism. A null input, a failed decode or absent binaries give a
+  * null output, so the clip goes to the error channel — the
+  * orchestration is real and tested, the codec is environmental.
   */
 object Ffmpeg {
 
@@ -26,124 +26,78 @@ object Ffmpeg {
     try { new ProcessBuilder(bin, "-version").start().waitFor() == 0 }
     catch { case _: java.io.IOException => false }
 
-  val transcodeSchema: StructType = StructType(Seq(
-    StructField("name", StringType, nullable = false),
-    StructField("payload", BinaryType, nullable = true),
-    StructField("error", StringType, nullable = true)))
+  /** Writes `payload` to `in.<inExt>` in a fresh temp dir, runs
+    * `cmd(in, dir)` and, on exit 0, returns `read(stdout, dir)`; null
+    * when the binaries are absent, the command fails or `read` throws.
+    * The dir is always removed. */
+  private def shellOut(payload: Array[Byte], inExt: String)
+                      (cmd: (Path, Path) => Seq[String])
+                      (read: (Array[Byte], Path) => Any): Any =
+    if (!available) null
+    else {
+      val dir = Files.createTempDirectory("graft-ffmpeg")
+      try {
+        val in = dir.resolve(s"in.$inExt")
+        Files.write(in, payload)
+        val p = new ProcessBuilder(cmd(in, dir): _*).redirectErrorStream(true).start()
+        val stdout = p.getInputStream.readAllBytes()
+        if (p.waitFor() == 0) read(stdout, dir) else null
+      } catch { case _: Exception => null }
+      finally { dir.toFile.listFiles().foreach(_.delete()); dir.toFile.delete() }
+    }
 
-  /** video bytes -> mono 16 kHz wav bytes
-    * (`ffmpeg -i in -vn -ar 16000 -ac 1 out.wav`, ffmpeg.py template). */
-  def videoToWav(df: DataFrame, nameCol: String, videoCol: String): DataFrame =
-    shellOp(df, nameCol, videoCol, "mp4", "wav",
-      (in, out) => Seq("ffmpeg", "-y", "-i", in.toString, "-vn",
-        "-ar", "16000", "-ac", "1", out.toString))
+  /** Appends `out`, computed by `f` from each row's `inCol` bytes: one
+    * shell-out per row, so a batch is one row. */
+  private def append(df: DataFrame, inCol: String, out: StructField)
+                    (f: Array[Byte] => Any): DataFrame =
+    ModelOp.appendBatches(df, Seq(inCol), Seq(out), 1, ModelOp.NoModel) { (_, batch) =>
+      batch.map(r => Row(f(r.getAs[Array[Byte]](0))))
+    }
 
-  /** aac bytes -> wav bytes. */
-  def aacToWav(df: DataFrame, nameCol: String, audioCol: String): DataFrame =
-    shellOp(df, nameCol, audioCol, "aac", "wav",
-      (in, out) => Seq("ffmpeg", "-y", "-i", in.toString,
-        "-ar", "16000", "-ac", "1", out.toString))
+  /** `VideoToImagesNode` (`ffmpeg.py:114-130`): appends `frames`, the
+    * video's jpeg frames (`-qscale:v 3` + `%06d.jpg` naming; frame order =
+    * the zero-padded name order). A video with no decoded frame gets null. */
+  def withFrames(df: DataFrame, videoCol: String): DataFrame =
+    append(df, videoCol, StructField("frames", ArrayType(BinaryType, false))) { video =>
+      shellOut(video, "mp4")((in, dir) => Seq("ffmpeg", "-y", "-i", in.toString,
+        "-qscale:v", "3", dir.resolve("%06d.jpg").toString)) { (_, dir) =>
+        val frames = dir.toFile.listFiles().filter(_.getName.endsWith(".jpg"))
+          .sortBy(_.getName).map(f => Files.readAllBytes(f.toPath)).toSeq
+        if (frames.isEmpty) null else frames
+      }
+    }
 
-  private def shellOp(df: DataFrame, nameCol: String, payloadCol: String,
-                      inExt: String, outExt: String,
-                      cmd: (Path, Path) => Seq[String]): DataFrame =
-    df.selectExpr(s"$nameCol as name", s"$payloadCol as payload")
-      .mapPartitions { iter =>
-        iter.map { r =>
-          val name = r.getString(0)
-          if (!available) Row(name, null, "ffmpeg unavailable in environment")
-          else {
-            val dir = Files.createTempDirectory("graft-ffmpeg")
-            try {
-              val in = dir.resolve(s"in.$inExt")
-              val out = dir.resolve(s"out.$outExt")
-              Files.write(in, r.getAs[Array[Byte]](1))
-              val p = new ProcessBuilder(cmd(in, out): _*)
-                .redirectErrorStream(true).start()
-              val code = p.waitFor()
-              if (code == 0 && Files.exists(out)) Row(name, Files.readAllBytes(out), null)
-              else Row(name, null, s"ffmpeg exit $code")
-            } catch {
-              case e: Exception => Row(name, null, e.getMessage)
-            } finally {
-              dir.toFile.listFiles().foreach(_.delete()); dir.toFile.delete()
-            }
-          }
+  /** `VideoToWavNode`: appends `wav`, the video's audio as mono 16 kHz
+    * (`ffmpeg -i in -vn -ar 16000 -ac 1 out.wav`, ffmpeg.py template)
+    * read at `sampleRate`. */
+  def withVideoWav(df: DataFrame, videoCol: String, sampleRate: Int): DataFrame =
+    wav(df, videoCol, "mp4", Seq("-vn"), sampleRate)
+
+  /** `AacToWavNode`: appends `wav` decoded from aac bytes. */
+  def withAacWav(df: DataFrame, aacCol: String, sampleRate: Int): DataFrame =
+    wav(df, aacCol, "aac", Nil, sampleRate)
+
+  private def wav(df: DataFrame, inCol: String, inExt: String, flags: Seq[String],
+                  sampleRate: Int): DataFrame =
+    append(df, inCol, StructField("wav", ArrayType(DoubleType, false))) { payload =>
+      shellOut(payload, inExt)((in, dir) => Seq("ffmpeg", "-y", "-i", in.toString) ++
+        flags ++ Seq("-ar", "16000", "-ac", "1", dir.resolve("out.wav").toString)) {
+        (_, dir) =>
+          graft.sources.Wav.decodeTo(Files.readAllBytes(dir.resolve("out.wav")), sampleRate)
+      }
+    }
+
+  /** Container fps probe (== `get_fps`, `dpl/common.py:30-32`): appends
+    * `fps`. */
+  def withFps(df: DataFrame, videoCol: String): DataFrame =
+    append(df, videoCol, StructField("fps", DoubleType)) { video =>
+      shellOut(video, "mp4")((in, _) => Seq("ffprobe", "-v", "0",
+        "-of", "csv=p=0", "-select_streams", "v:0",
+        "-show_entries", "stream=r_frame_rate", in.toString)) { (stdout, _) =>
+        new String(stdout).trim.split("/") match {
+          case Array(num, den) if den.toDouble != 0 => num.toDouble / den.toDouble
+          case _ => null
         }
-      }(RowEncoder.encoderFor(transcodeSchema))
-
-  val framesSchema: StructType = StructType(Seq(
-    StructField("name", StringType, nullable = false),
-    StructField("frames", ArrayType(BinaryType, containsNull = false), nullable = true),
-    StructField("error", StringType, nullable = true)))
-
-  /** video bytes -> ordered jpeg frame bytes (`VideoToImagesNode`,
-    * `dpl/processor/nodes/ffmpeg.py:114-130`: `-qscale:v 3` + `%06d.jpg`
-    * naming; frame order = the zero-padded name order). */
-  def videoToFrames(df: DataFrame, nameCol: String, videoCol: String): DataFrame =
-    df.selectExpr(s"$nameCol as name", s"$videoCol as payload")
-      .mapPartitions { iter =>
-        iter.map { r =>
-          val name = r.getString(0)
-          if (!available) Row(name, null, "ffmpeg unavailable in environment")
-          else {
-            val dir = Files.createTempDirectory("graft-ffmpeg")
-            try {
-              val in = dir.resolve("in.mp4")
-              Files.write(in, r.getAs[Array[Byte]](1))
-              val p = new ProcessBuilder("ffmpeg", "-y", "-i", in.toString,
-                  "-qscale:v", "3", dir.resolve("%06d.jpg").toString)
-                .redirectErrorStream(true).start()
-              p.getInputStream.readAllBytes()
-              val code = p.waitFor()
-              if (code != 0) Row(name, null, s"ffmpeg exit $code")
-              else {
-                val frames = dir.toFile.listFiles()
-                  .filter(_.getName.endsWith(".jpg")).sortBy(_.getName)
-                  .map(f => Files.readAllBytes(f.toPath))
-                if (frames.isEmpty) Row(name, null, "no frames decoded")
-                else Row(name, frames.toSeq, null)
-              }
-            } catch {
-              case e: Exception => Row(name, null, e.getMessage)
-            } finally {
-              dir.toFile.listFiles().foreach(_.delete()); dir.toFile.delete()
-            }
-          }
-        }
-      }(RowEncoder.encoderFor(framesSchema))
-
-  val fpsSchema: StructType = StructType(Seq(
-    StructField("name", StringType, nullable = false),
-    StructField("fps", DoubleType, nullable = true)))
-
-  /** Container fps probe (== `get_fps`, `dpl/common.py:30-32`). */
-  def probeFps(df: DataFrame, nameCol: String, videoCol: String): DataFrame =
-    df.selectExpr(s"$nameCol as name", s"$videoCol as payload")
-      .mapPartitions { iter =>
-        iter.map { r =>
-          val name = r.getString(0)
-          if (!available) Row(name, null)
-          else {
-            val dir = Files.createTempDirectory("graft-ffprobe")
-            try {
-              val in = dir.resolve("in.mp4")
-              Files.write(in, r.getAs[Array[Byte]](1))
-              val p = new ProcessBuilder("ffprobe", "-v", "0",
-                "-of", "csv=p=0", "-select_streams", "v:0",
-                "-show_entries", "stream=r_frame_rate", in.toString).start()
-              val outStr = new String(p.getInputStream.readAllBytes()).trim
-              p.waitFor()
-              outStr.split("/") match {
-                case Array(num, den) if den.toDouble != 0 =>
-                  Row(name, num.toDouble / den.toDouble)
-                case _ => Row(name, null)
-              }
-            } catch { case _: Exception => Row(name, null) }
-            finally {
-              dir.toFile.listFiles().foreach(_.delete()); dir.toFile.delete()
-            }
-          }
-        }
-      }(RowEncoder.encoderFor(fpsSchema))
+      }
+    }
 }

@@ -5,7 +5,6 @@ import java.awt.image.BufferedImage
 import java.io.ByteArrayOutputStream
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.{col, inline}
 import org.apache.spark.sql.types._
 
 /** Image crop/resize — the reference's `CropNode` (`dpl/processor/nodes/
@@ -20,11 +19,6 @@ import org.apache.spark.sql.types._
   * LANCZOS (geometry and layout semantics are identical).
   */
 object ImageOps {
-
-  private val frameCrop = StructType(Seq(
-    StructField("frame_idx", IntegerType, nullable = false),
-    StructField("crop", BinaryType, nullable = true),
-    StructField("error", StringType, nullable = true)))
 
   def cropResizeBytes(imageBytes: Array[Byte], x1: Int, y1: Int, x2: Int, y2: Int,
                       outSize: Int, quality: Float = 0.95f): Array[Byte] = {
@@ -62,49 +56,25 @@ object ImageOps {
     baos.toByteArray
   }
 
-  /** One clip's crops: per frame (frame_idx, crop | error). The zip of
-    * frames and boxes mirrors `crop.py:72-74`; a cardinality mismatch is
-    * one (-1, null, error) entry (== the equal-length zip guard,
-    * `common.py:79-81`). */
-  private def cropClip(frames: Seq[Array[Byte]], boxes: Seq[Row], outSize: Int,
-                       quality: Float): Seq[Row] =
-    if (frames.length != boxes.length)
-      Seq(Row(-1, null,
-        s"cardinality mismatch: ${frames.length} frames vs ${boxes.length} boxes"))
-    else frames.zip(boxes).zipWithIndex.map { case ((bytes, box), i) =>
-      try Row(i, cropResizeBytes(bytes,
-        box.getLong(0).toInt, box.getLong(1).toInt,
-        box.getLong(2).toInt, box.getLong(3).toInt, outSize, quality), null)
-      catch { case e: Exception => Row(i, null, Option(e.getMessage).getOrElse(e.toString)) }
-    }
-
-  private def cropKernel(outSize: Int, quality: Float)(batch: Seq[Row]): Seq[Seq[Row]] =
-    batch.map(r => cropClip(r.getSeq[Array[Byte]](0), r.getSeq[Row](1), outSize, quality))
-
   /** `CropNode`: appends `crops` (array<binary>, index-aligned with the
-    * frames) cut from (frames: array<binary>, bboxes:
-    * array<struct<x1,y1,x2,y2: long>>). A clip with any failed frame, a
-    * frames/boxes count mismatch or no frames gets null crops and flows
-    * to the error side-output: the reference's fail-the-clip semantics,
-    * never a silently shifted frame axis. */
+    * frames; the zip of frames and boxes mirrors `crop.py:72-74`) cut from
+    * (frames: array<binary>, bboxes: array<struct<x1,y1,x2,y2: long>>). A
+    * clip with any failed frame, a frames/boxes count mismatch (the
+    * equal-length zip guard, `common.py:79-81`) or no frames gets null
+    * crops and flows to the error side-output: the reference's
+    * fail-the-clip semantics, never a silently shifted frame axis. */
   def withCrops(df: DataFrame, framesCol: String, bboxesCol: String,
                 outSize: Int = 224, quality: Float = 0.95f): DataFrame =
     ModelOp.appendBatches(df, Seq(framesCol, bboxesCol),
       Seq(StructField("crops", ArrayType(BinaryType, true))), 8, ModelOp.NoModel) { (_, batch) =>
-      cropKernel(outSize, quality)(batch).map { frames =>
-        val crops = frames.map(_.get(1))
-        Row(if (crops.isEmpty || crops.contains(null)) null else crops)
+      batch.map { r =>
+        val frames = r.getSeq[Array[Byte]](0)
+        val boxes = r.getSeq[Row](1)
+        Row(if (frames.isEmpty || frames.length != boxes.length) null
+          else try frames.zip(boxes).map { case (bytes, box) =>
+            cropResizeBytes(bytes, box.getLong(0).toInt, box.getLong(1).toInt,
+              box.getLong(2).toInt, box.getLong(3).toInt, outSize, quality)
+          } catch { case _: Exception => null })
       }
     }
-
-  /** Crop+resize every frame of a clip table:
-    * (name, frames: array<binary>, bboxes: array<struct<x1,y1,x2,y2: long>>)
-    * -> long table (name, frame_idx, crop bytes | error). */
-  def cropFrames(df: DataFrame, nameCol: String, framesCol: String,
-                 bboxesCol: String, outSize: Int = 224,
-                 quality: Float = 0.95f): DataFrame =
-    ModelOp.selectBatches(df, nameCol, Seq(framesCol, bboxesCol),
-      Seq(StructField("frames", ArrayType(frameCrop, false))), 8, ModelOp.NoModel) {
-      (_, batch) => cropKernel(outSize, quality)(batch).map(Row(_))
-    }.select(col("name"), inline(col("frames")))
 }

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Batched per-partition model inference with lazily-loaded per-executor
@@ -61,17 +60,5 @@ object ModelOp {
         }
       }
     }(RowEncoder.encoderFor(schema))
-  }
-
-  /** The standalone form of [[appendBatches]]: the kernel over the
-    * `inputs` columns of `df`, as a table `(name, outFields...)`. */
-  def selectBatches[M](df: DataFrame, nameCol: String, inputs: Seq[String],
-                       outFields: Seq[StructField], batchSize: Int, res: ModelResource[M])
-                      (fn: (M, Seq[Row]) => Seq[Row]): DataFrame = {
-    val args = inputs.indices.map(i => s"_in$i")
-    val in = df.select(col(nameCol).as("name") +:
-      inputs.zip(args).map { case (c, a) => col(c).as(a) }: _*)
-    appendBatches(in, args, outFields, batchSize, res)(fn)
-      .select(("name" +: outFields.map(_.name)).map(col): _*)
   }
 }

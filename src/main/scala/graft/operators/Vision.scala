@@ -72,9 +72,6 @@ object Vision {
     def key: String = s"vision-$op-$id"; def load(): T = f
   }
 
-  private def detectKernel(det: Detector, batch: Seq[Row]): Seq[Row] =
-    batch.map(r => Row(r.getSeq[Array[Byte]](0).map(f => det(f).toSeq)))
-
   /** Appends `raw_bboxes` (per frame, the full (N,5) candidate list;
     * best-face selection is `ClipOps.bestFacePerFrame`) computed from
     * `framesCol`. Batch default matches the reference (face-align batch
@@ -83,15 +80,9 @@ object Vision {
                      detector: Detector = StubDetector,
                      detectorId: String = "stub"): DataFrame =
     ModelOp.appendBatches(df, Seq(framesCol), detectFields, batchSize,
-      Res("detect", detectorId, detector))(detectKernel)
-
-  /** frames: array<binary> per clip -> (name, raw_bboxes). */
-  def detectFaces(df: DataFrame, nameCol: String, framesCol: String,
-                  batchSize: Int = 8,
-                  detector: Detector = StubDetector,
-                  detectorId: String = "stub"): DataFrame =
-    ModelOp.selectBatches(df, nameCol, Seq(framesCol), detectFields, batchSize,
-      Res("detect", detectorId, detector))(detectKernel)
+      Res("detect", detectorId, detector)) { (det, batch) =>
+      batch.map(r => Row(r.getSeq[Array[Byte]](0).map(f => det(f).toSeq)))
+    }
 
   private val pointStruct = StructType(Seq(
     StructField("x", DoubleType), StructField("y", DoubleType)))
@@ -99,25 +90,16 @@ object Vision {
   private val landmarkFields: Seq[StructField] = Seq(
     StructField("landmarks", ArrayType(ArrayType(pointStruct, false), false)))
 
-  private def alignKernel(lm: LandmarkModel, batch: Seq[Row]): Seq[Row] =
-    batch.map(r => Row(r.getSeq[Array[Byte]](0).map(f =>
-      lm(f).map(p => Row(p(0), p(1))).toSeq)))
-
   /** Appends `landmarks` as struct<x,y> points (the clip table's landmark
     * column form, §1.3) so bbox/blink ops consume them directly. */
   def withLandmarks(df: DataFrame, framesCol: String, batchSize: Int = 8,
                     model: LandmarkModel = StubLandmarks,
                     modelId: String = "stub"): DataFrame =
     ModelOp.appendBatches(df, Seq(framesCol), landmarkFields, batchSize,
-      Res("align", modelId, model))(alignKernel)
-
-  /** frames: array<binary> per clip -> (name, landmarks). */
-  def alignFaces(df: DataFrame, nameCol: String, framesCol: String,
-                 batchSize: Int = 8,
-                 model: LandmarkModel = StubLandmarks,
-                 modelId: String = "stub"): DataFrame =
-    ModelOp.selectBatches(df, nameCol, Seq(framesCol), landmarkFields, batchSize,
-      Res("align", modelId, model))(alignKernel)
+      Res("align", modelId, model)) { (lm, batch) =>
+      batch.map(r => Row(r.getSeq[Array[Byte]](0).map(f =>
+        lm(f).map(p => Row(p(0), p(1))).toSeq)))
+    }
 
   private val emocaFields: Seq[StructField] = Seq(
     StructField("shape", ArrayType(ArrayType(DoubleType, false), false)),
@@ -127,14 +109,6 @@ object Vision {
     StructField("cam", ArrayType(ArrayType(DoubleType, false), false)),
     StructField("light", ArrayType(ArrayType(ArrayType(DoubleType, false), false), false)))
 
-  private def emocaKernel(enc: EmocaEncoder, batch: Seq[Row]): Seq[Row] =
-    batch.map { r =>
-      val codes = r.getSeq[Array[Byte]](0).map(enc)
-      Row(codes.map(_.shape.toSeq), codes.map(_.tex.toSeq),
-        codes.map(_.exp.toSeq), codes.map(_.pose.toSeq),
-        codes.map(_.cam.toSeq), codes.map(_.light.map(_.toSeq).toSeq))
-    }
-
   /** Appends the six FLAME code series of `cropsCol` (array<binary> per
     * clip; frame axis = array index; shapes as §1.3). A clip whose crops
     * are null (a frame failed upstream) gets null codes. */
@@ -142,16 +116,14 @@ object Vision {
                 encoder: EmocaEncoder = StubEmoca,
                 encoderId: String = "stub"): DataFrame =
     ModelOp.appendBatches(df, Seq(cropsCol), emocaFields, batchSize,
-      Res("emoca", encoderId, encoder))(emocaKernel)
-
-  /** crops: array<binary> per clip -> (name, shape, tex, exp, pose, cam,
-    * light). */
-  def emocaEncode(df: DataFrame, nameCol: String, cropsCol: String,
-                  batchSize: Int = 8,
-                  encoder: EmocaEncoder = StubEmoca,
-                  encoderId: String = "stub"): DataFrame =
-    ModelOp.selectBatches(df, nameCol, Seq(cropsCol), emocaFields, batchSize,
-      Res("emoca", encoderId, encoder))(emocaKernel)
+      Res("emoca", encoderId, encoder)) { (enc, batch) =>
+      batch.map { r =>
+        val codes = r.getSeq[Array[Byte]](0).map(enc)
+        Row(codes.map(_.shape.toSeq), codes.map(_.tex.toSeq),
+          codes.map(_.exp.toSeq), codes.map(_.pose.toSeq),
+          codes.map(_.cam.toSeq), codes.map(_.light.map(_.toSeq).toSeq))
+      }
+    }
 
   /** Tiny deterministic FLAME-shaped asset set (3 verts, 2 joints, one
     * face, and FLAME's 68 landmarks as distinct barycentric points on

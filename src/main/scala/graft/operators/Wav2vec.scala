@@ -71,12 +71,6 @@ object Wav2vec {
     def load(): Encoder = enc
   }
 
-  private def kernel(sampleRate: Int)(enc: Encoder, batch: Seq[Row]): Seq[Row] =
-    batch.map { r =>
-      val wav = r.getSeq[Double](0).toArray
-      Row(encodeWaveform(wav, sampleRate, enc), volume(wav, sampleRate))
-    }
-
   /** Appends (wav2vec, volume) computed from `wavCol` (array<double>),
     * batched with a per-executor lazily-loaded encoder. batchSize default
     * mirrors the reference config (wav2vec batch 8, BASELINE.md). */
@@ -84,13 +78,10 @@ object Wav2vec {
                    batchSize: Int = 8, encoder: Encoder = StubEncoder,
                    encoderId: String = "stub"): DataFrame =
     ModelOp.appendBatches(df, Seq(wavCol), outFields, batchSize,
-      EncoderResource(encoderId, encoder))(kernel(sampleRate))
-
-  /** (name, wav) -> (name, wav2vec, volume). */
-  def extract(df: DataFrame, nameCol: String, wavCol: String,
-              sampleRate: Int = 16000, batchSize: Int = 8,
-              encoder: Encoder = StubEncoder,
-              encoderId: String = "stub"): DataFrame =
-    ModelOp.selectBatches(df, nameCol, Seq(wavCol), outFields, batchSize,
-      EncoderResource(encoderId, encoder))(kernel(sampleRate))
+      EncoderResource(encoderId, encoder)) { (enc, batch) =>
+      batch.map { r =>
+        val wav = r.getSeq[Double](0).toArray
+        Row(encodeWaveform(wav, sampleRate, enc), volume(wav, sampleRate))
+      }
+    }
 }

@@ -1,9 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions._
-import graft.operators.{ClipOps, ImageOps, Sinks, Spread, Vision, Wav2vec}
+import graft.operators.{ClipOps, Ffmpeg, ImageOps, Sinks, Spread, Vision, Wav2vec}
 
 /** The pipeline driver: a Spark-first re-expression of the reference's
   * `Engine` (`dpl/processor/engine.py`) and node protocol
@@ -18,8 +18,9 @@ import graft.operators.{ClipOps, ImageOps, Sinks, Spread, Vision, Wav2vec}
   *    type, duplicate output type -> error before any job runs.
   *  - execution: each op appends its output columns to the row it reads —
   *    a column expression or one batched `mapPartitions`
-  *    ([[graft.operators.ModelOp.appendBatches]]), never a join back on
-  *    `name` — so the whole DAG is ONE narrow stage over the clip scan.
+  *    ([[graft.operators.ModelOp.appendBatches]]; the ffmpeg shell-outs
+  *    too), never a join back on `name` — so the whole DAG is ONE narrow
+  *    stage over the clip scan.
   *    The reference's chunk-interleaved generators (`engine.py:64-73`) are
   *    subsumed by per-partition pipelining, its joblib pools by partition
   *    parallelism; `Spread.fanOut` spreads a scan narrower than the
@@ -29,27 +30,23 @@ import graft.operators.{ClipOps, ImageOps, Sinks, Spread, Vision, Wav2vec}
   *    processed and error counts; the manifest is then written from the
   *    files that write committed, so it never re-runs a node.
   *  - memoization (`base.py:135`): a left-anti join against the manifest's
-  *    `name`s skips completed clips unless `recompute`.
+  *    `name`s skips completed clips unless `recompute`, which overwrites
+  *    `clips` and `_manifest` instead of appending to them.
   *  - row-level error capture (`base.py:137-142`): ops surface row failures
   *    as nulls (a null input gives null outputs); failed rows are diverted
   *    to an error side-output and counted per node, matching
   *    `NodeExecReport` (`base.py:12-27`).
-  *  - `test_run` probe (`base.py:106-112`): limit(1) dry pass.
   */
 final case class NodeSpec(op: String, params: Map[String, String] = Map.empty)
 
 final case class PipelineReport(node: String, status: String, count: Long)
 
 /** One operator: consumes `inputTypes` columns, appends `outputTypes`
-  * columns. `failed` flags rows the op could not process (error channel). */
+  * columns; a row it could not process gets a null output. */
 trait ClipOp {
   def inputTypes: Seq[String]
   def outputTypes: Seq[String]
   def apply(df: DataFrame, params: Map[String, String]): DataFrame
-  /** Predicate marking failed rows AFTER apply (the node's error count in
-    * the execution report); default: any null output. */
-  def failed(df: DataFrame): Column =
-    outputTypes.map(t => col(t).isNull).reduce(_ || _)
 }
 
 /** Registry of built-in operators — the analogue of the reference's
@@ -170,41 +167,27 @@ object OpRegistry {
       def apply(df: DataFrame, params: Map[String, String]): DataFrame =
         Vision.withLandmarks(df, "frames")
     },
-    // ---- ffmpeg transcodes (shell-outs; rows degrade to the error channel
-    //      when the binary is absent; joined back on name) ----
+    // ---- ffmpeg transcodes (shell-out kernels appending in place; a
+    //      failed decode or an absent binary gives a null output) ----
     "video_to_frames" -> new ClipOp {
       val inputTypes = Seq("video"); val outputTypes = Seq("frames")
       def apply(df: DataFrame, params: Map[String, String]): DataFrame =
-        df.join(graft.operators.Ffmpeg.videoToFrames(df, "name", "video")
-          .select("name", "frames"), Seq("name"), "left")
+        Ffmpeg.withFrames(df, "video")
     },
     "video_to_wav" -> new ClipOp {
       val inputTypes = Seq("video"); val outputTypes = Seq("wav")
-      def apply(df: DataFrame, params: Map[String, String]): DataFrame = {
-        val sr = p(params, "sample_rate", 16000).toInt
-        val decode = udf((b: Array[Byte]) =>
-          if (b == null) null else graft.sources.Wav.decodeTo(b, sr))
-        df.join(graft.operators.Ffmpeg.videoToWav(df, "name", "video")
-          .select(col("name"), decode(col("payload")).as("wav")),
-          Seq("name"), "left")
-      }
+      def apply(df: DataFrame, params: Map[String, String]): DataFrame =
+        Ffmpeg.withVideoWav(df, "video", p(params, "sample_rate", 16000).toInt)
     },
     "aac_to_wav" -> new ClipOp {
       val inputTypes = Seq("aac"); val outputTypes = Seq("wav")
-      def apply(df: DataFrame, params: Map[String, String]): DataFrame = {
-        val sr = p(params, "sample_rate", 16000).toInt
-        val decode = udf((b: Array[Byte]) =>
-          if (b == null) null else graft.sources.Wav.decodeTo(b, sr))
-        df.join(graft.operators.Ffmpeg.aacToWav(df, "name", "aac")
-          .select(col("name"), decode(col("payload")).as("wav")),
-          Seq("name"), "left")
-      }
+      def apply(df: DataFrame, params: Map[String, String]): DataFrame =
+        Ffmpeg.withAacWav(df, "aac", p(params, "sample_rate", 16000).toInt)
     },
     "probe_fps" -> new ClipOp {
       val inputTypes = Seq("video"); val outputTypes = Seq("fps")
       def apply(df: DataFrame, params: Map[String, String]): DataFrame =
-        df.join(graft.operators.Ffmpeg.probeFps(df, "name", "video"),
-          Seq("name"), "left")
+        Ffmpeg.withFps(df, "video")
     },
     // every-nth frame subsampling (temporal downsampling before the
     // expensive per-frame inference ops)
@@ -323,21 +306,22 @@ final case class Pipeline(nodes: Seq[NodeSpec], outputDir: String) {
   }
 
   /** Execute over a clip table (must have `name` + input type columns).
-    * Returns (the rows this run committed, report). With `testRun`,
-    * processes limit(1) first (probe) before the full pass —
-    * `base.py:106-112`.
+    * Returns (the rows this run committed, report).
     *
-    * The node chain runs in ONE action: the append of the good rows to
+    * The node chain runs in ONE action: the write of the good rows to
     * `clips`. Two observations ride on that plan — the input rows below
     * the memo filter, the chain's rows and per-node null outputs above
-    * the last node — so the report costs no further pass. */
+    * the last node — so the report costs no further pass.
+    *
+    * A plain execute appends: clips named in `_manifest` are skipped and
+    * the rows it commits are added to `clips` and `_manifest`. With
+    * `recompute` (SURVEY.md §2.2: overwrite mode) the manifest is ignored
+    * and `clips` and `_manifest` are overwritten, so afterwards both hold
+    * exactly this run's committed clips — none when every clip failed. */
   def execute(spark: SparkSession, clips: DataFrame,
-              recompute: Boolean = false,
-              testRun: Boolean = false): (DataFrame, Seq[PipelineReport]) = {
+              recompute: Boolean = false): (DataFrame, Seq[PipelineReport]) = {
     val inputTypes = clips.columns.toSet - "name"
     validate(inputTypes)
-
-    if (testRun) chain(clips.limit(1)).count()
 
     val seen = Observation()
     val input = Spread.fanOut(clips.observe(seen, count(lit(1)).as("rows")), clips)
@@ -351,16 +335,18 @@ final case class Pipeline(nodes: Seq[NodeSpec], outputDir: String) {
         Seq("name"), "left_anti")
     val out = chain(todo)
     // error channel: a row failed at a node when any of its outputs is null
-    val failed = nodes.map(spec => OpRegistry.resolve(spec.op).get.failed(out))
+    val failed = nodes.map(spec =>
+      OpRegistry.resolve(spec.op).get.outputTypes.map(t => col(t).isNull).reduce(_ || _))
     val anyFail = failed.reduceOption(_ || _).getOrElse(lit(false))
     val done = Observation()
     val observed = out.observe(done, count(lit(1)).as("rows"),
       count_if(anyFail).as("errors") +:
         failed.zipWithIndex.map { case (f, i) => count_if(f).as(s"node$i") }: _*)
 
+    val mode = if (recompute) "overwrite" else "append"
     val clipsPath = s"$outputDir/clips"
     val before = dataFiles(spark, clipsPath).getOrElse(Nil).toSet
-    observed.where(!anyFail).write.mode("append").parquet(clipsPath)
+    observed.where(!anyFail).write.mode(mode).parquet(clipsPath)
     val added = dataFiles(spark, clipsPath).getOrElse(Nil).filterNot(before)
     val committed =
       if (added.isEmpty) spark.createDataFrame(java.util.List.of[Row](), out.schema)
@@ -376,7 +362,8 @@ final case class Pipeline(nodes: Seq[NodeSpec], outputDir: String) {
     val rows = totals("rows")
     val errors = totals("errors")
     val processed = rows - errors
-    if (processed > 0) committed.select("name").write.mode("append").parquet(manifestPath)
+    if (recompute || processed > 0)
+      committed.select("name").write.mode(mode).parquet(manifestPath)
     val skipped = counts(seen)("rows") - rows
     val report = nodes.indices.map(i =>
       PipelineReport(nodes(i).op, "errors", totals(s"node$i"))) :+

@@ -49,9 +49,9 @@ object ClipCatalog {
     * is a directory of `%06d.<ext>`-numbered frames under `root` (the
     * ffmpeg image2 layout). Yields `(name, <frameCol>: array<binary>)`
     * with one row per clip and frames ordered by their numeric index —
-    * the same clip-table shape `Ffmpeg.videoToFrames` produces, so every
-    * downstream frame op (crop, pack, ...) runs on scanned trees
-    * unchanged.
+    * the same `frames` column the `video_to_frames` node appends to a
+    * clip row, so every downstream frame op (crop, pack, ...) runs on
+    * scanned trees unchanged.
     *
     * The binary scan parallelizes per file; the one shuffle regroups
     * frames into clip rows, and `array_sort` on an (idx, bytes) struct
@@ -79,23 +79,14 @@ object ClipCatalog {
         array_sort(collect_list(struct(col("frame_idx"), col("content")))),
         f => f("content")).as(frameCol))
 
-  /** A parquet-backed data type: any table with a `name` column; remaining
-    * columns become the type's payload columns. */
-  def scanParquetType(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
   /** Multi-way inner join on `name` over per-type frames — the reference's
     * `set.intersection` over name sets. Raises if the intersection is empty
     * (`engine.py:32-33`). Each input must expose a `name` column.
     *
-    * Emptiness is probed in two tiers: each INPUT is always probed with a
-    * limit(1) scan (a scan-only job — a misconfigured catalog with an
-    * empty collection errors without evaluating the join), while the
-    * full-intersection probe is gated by `probeIntersection` because
-    * proving a multi-way join empty requires evaluating it; on a 100 TB
-    * catalog callers can opt out and rely on the per-input tier. */
-  def intersectOnName(inputs: Seq[DataFrame],
-                      probeIntersection: Boolean = true): DataFrame = {
+    * Emptiness is probed in two tiers: each INPUT with a limit(1) scan (a
+    * scan-only job — a misconfigured catalog with an empty collection
+    * errors without evaluating the join), then the intersection itself. */
+  def intersectOnName(inputs: Seq[DataFrame]): DataFrame = {
     require(inputs.nonEmpty, "no input collections")
     inputs.zipWithIndex.foreach { case (in, i) =>
       if (in.select(lit(1)).limit(1).isEmpty)
@@ -107,7 +98,7 @@ object ClipCatalog {
     // probe early-exits on the first surviving row in the common
     // (non-empty) case; only a genuinely-empty intersection pays the full
     // join evaluation before erroring.
-    if (probeIntersection && joined.select(lit(1)).limit(1).isEmpty)
+    if (joined.select(lit(1)).limit(1).isEmpty)
       throw new IllegalArgumentException(
         "empty name intersection across input collections")
     joined

@@ -62,9 +62,9 @@ class MediaOpsSpec extends SparkTestBase {
     val withBoxes = scanned.where(col("name") === "b")
       .withColumn("bboxes", expr(
         "transform(frames, f -> struct(0L as x1, 0L as y1, 32L as x2, 32L as y2))"))
-    val cropped = ImageOps.cropFrames(withBoxes, "name", "frames", "bboxes", outSize = 16)
-      .collect()
-    assert(cropped.length == 3 && cropped.forall(_.isNullAt(3)))
+    val cropped = ImageOps.withCrops(withBoxes, "frames", "bboxes", outSize = 16)
+      .select("crops").head.getSeq[Array[Byte]](0)
+    assert(cropped.length == 3 && cropped.forall(_ != null))
   }
 
   test("cropFrames produces one row per frame and errors on cardinality mismatch") {
@@ -75,10 +75,17 @@ class MediaOpsSpec extends SparkTestBase {
       .toDF("name", "frames", "raw_boxes")
       .withColumn("bboxes", expr(
         "transform(raw_boxes, b -> struct(b._1 as x1, b._2 as y1, b._3 as x2, b._4 as y2))"))
-    val out = ImageOps.cropFrames(df, "name", "frames", "bboxes", outSize = 32)
-      .collect().groupBy(_.getString(0))
-    assert(out("clip_ok").length == 2 && out("clip_ok").forall(_.isNullAt(3)))
-    assert(out("clip_bad").length == 1 && out("clip_bad")(0).getString(3).contains("cardinality"))
+    // one crop per frame; a frames/boxes count mismatch gives null crops,
+    // which send the clip to the error channel
+    val out = ImageOps.withCrops(df, "frames", "bboxes", outSize = 32)
+      .select("name", "crops").collect().map(r => r.getString(0) -> r).toMap
+    val crops = out("clip_ok").getSeq[Array[Byte]](1)
+    assert(crops.length == 2)
+    crops.foreach { c =>
+      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(c))
+      assert(img.getWidth == 32 && img.getHeight == 32)
+    }
+    assert(out("clip_bad").isNullAt(1))
   }
 
   test("wav2vec chunking splits >10s audio and applies the length magic") {
@@ -103,7 +110,8 @@ class MediaOpsSpec extends SparkTestBase {
     val df = Seq(
       ("a", Seq.tabulate(16000)(i => math.sin(i * 0.001))),
       ("b", Seq.tabulate(8000)(i => math.cos(i * 0.002)))).toDF("name", "wav")
-    val out = Wav2vec.extract(df, "name", "wav").orderBy("name").collect()
+    val out = Wav2vec.withFeatures(df, "wav").select("name", "wav2vec", "volume")
+      .orderBy("name").collect()
     assert(out.length == 2)
     // 1s @16k -> magic = int(50 - 0.25) = 49 frames
     assert(out(0).getSeq[Seq[Double]](1).length == 49)

@@ -39,15 +39,17 @@ class ModelOpSpec extends SparkTestBase {
   }
 
   test("ffmpeg ops degrade to the error channel when binaries are absent") {
-    val df = Seq(("clip_a", Array[Byte](1, 2, 3))).toDF("name", "video")
-    val out = Ffmpeg.videoToWav(df, "name", "video").collect()
-    assert(out.length == 1)
-    if (!Ffmpeg.available) {
-      assert(out(0).isNullAt(1))
-      assert(out(0).getString(2) != null)
-    } else {
-      // real ffmpeg: garbage input must yield an error row, not a crash
-      assert(out(0).isNullAt(1) && out(0).getString(2) != null)
-    }
+    // absent binaries, or real ffmpeg on garbage input: every node appends
+    // a null output to the row it read (error channel), never a crash
+    val df = Seq(("clip_a", Array[Byte](1, 2, 3)), ("clip_b", null)).toDF("name", "video")
+    val out = Ffmpeg.withFps(Ffmpeg.withVideoWav(Ffmpeg.withFrames(df, "video"),
+      "video", 16000), "video")
+    assert(out.columns.toSeq == Seq("name", "video", "frames", "wav", "fps"))
+    val rows = out.collect()
+    assert(rows.map(_.getString(0)).toSeq == Seq("clip_a", "clip_b"))
+    assert(rows.forall(r => r.isNullAt(2) && r.isNullAt(3) && r.isNullAt(4)))
+    val aac = Ffmpeg.withAacWav(Seq(("clip_a", Array[Byte](1, 2, 3))).toDF("name", "aac"),
+      "aac", 16000).collect()
+    assert(aac.length == 1 && aac(0).isNullAt(2))
   }
 }

@@ -51,12 +51,20 @@ class PipelineSpec extends SparkTestBase {
     val (_, rep2) = pipe.execute(spark, clipTable)
     assert(rep2.exists(r => r.status == "skipped_memoized" && r.count == 2))
     assert(rep2.exists(r => r.status == "processed" && r.count == 0))
-    // recompute overrides the manifest
+    // recompute ignores the manifest and overwrites: `clips` and
+    // `_manifest` hold each clip once
     val (_, rep3) = pipe.execute(spark, clipTable, recompute = true)
     assert(rep3.exists(r => r.status == "processed" && r.count == 2))
-    // written clips parquet is readable and has both rows (append x2)
     val written = spark.read.parquet(s"$dir/clips")
-    assert(written.count() == 4)
+    assert(written.count() == 2)
+    assert(names(written) == Seq("clip_a", "clip_b"))
+    assert(names(spark.read.parquet(s"$dir/_manifest")) == names(written))
+    // a recompute in which every clip fails leaves no clip committed
+    val (out4, rep4) = pipe.execute(spark,
+      clipTable.withColumn("wav", lit(null).cast("array<double>")), recompute = true)
+    assert(count(rep4, "_pipeline", "errors") == 2 && out4.count() == 0, s"report: $rep4")
+    assert(spark.read.schema(out4.schema).parquet(s"$dir/clips").count() == 0)
+    assert(names(spark.read.schema("name STRING").parquet(s"$dir/_manifest")).isEmpty)
   }
 
   test("an execute over an empty clip table commits nothing and reports zeros") {
@@ -173,6 +181,31 @@ class PipelineSpec extends SparkTestBase {
     // one blink ratio per EMOCA code, each a number
     assert(rows.forall(r => r.getInt(1) == r.getInt(2)))
     assert(rows.forall(_.getSeq[Double](3).forall(b => !b.isNaN)))
+    // all 11 nodes also run from a `video` column: bytes no ffmpeg decodes
+    // (or no binary at all) fail both clips at the first node, and
+    // nothing is committed
+    val videos = Seq(("clip_a", Array[Byte](1, 2, 3)), ("clip_b", Array[Byte](4, 5, 6)))
+      .toDF("name", "video")
+    val vdir = java.nio.file.Files.createTempDirectory("graft-a2en-video").toString
+    val (committed, vrep) = Pipeline(graph.map(NodeSpec(_)), vdir).execute(spark, videos)
+    assert(count(vrep, "VideoToImagesNode", "errors") == 2, s"report: $vrep")
+    assert(count(vrep, "_pipeline", "errors") == 2, s"report: $vrep")
+    assert(count(vrep, "_pipeline", "processed") == 0, s"report: $vrep")
+    assert(committed.count() == 0)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$vdir/_manifest")))
+  }
+
+  test("ffmpeg nodes keep the row count of a clip table with a repeated name") {
+    // the nodes append to the row they read: no join back on `name` that
+    // would multiply the rows of a repeated name
+    val clips = Seq(("clip_a", Array[Byte](1)), ("clip_a", Array[Byte](2)),
+      ("clip_b", Array[Byte](3))).toDF("name", "video")
+    val frames = OpRegistry.ops("video_to_frames")(clips, Map.empty)
+    val fps = OpRegistry.ops("probe_fps")(frames, Map.empty)
+    assert(frames.count() == 3 && fps.count() == 3)
+    assert(fps.columns.toSeq == Seq("name", "video", "frames", "fps"))
+    assert(fps.select("video").collect().map(_.getAs[Array[Byte]](0).head).sorted.toSeq ==
+      Seq[Byte](1, 2, 3))
   }
 
   test("alignment-driven branch: face_alignment -> fixed_bboxes -> crop -> src_seq") {
@@ -307,8 +340,10 @@ class PipelineSpec extends SparkTestBase {
     seen.asScala.toSeq
   }
 
-  private def runsNodes(qe: QueryExecution): Boolean =
-    qe.optimizedPlan.collectFirst { case m: MapPartitions => m }.nonEmpty
+  private def kernels(qe: QueryExecution): Int =
+    qe.optimizedPlan.collect { case m: MapPartitions => m }.size
+
+  private def runsNodes(qe: QueryExecution): Boolean = kernels(qe) > 0
 
   private def joins(qe: QueryExecution): Seq[Join] =
     qe.optimizedPlan.collect { case j: Join => j }
@@ -328,7 +363,8 @@ class PipelineSpec extends SparkTestBase {
     val e2e = Seq(NodeSpec("face_detection"), NodeSpec("best_face"),
       NodeSpec("transform_bboxes"), NodeSpec("crop"), NodeSpec("emoca"),
       NodeSpec("wav2vec"), NodeSpec("flame"), NodeSpec("render", Map("size" -> "32")))
-    for ((label, nodes) <- Seq("roster" -> roster, "e2e" -> e2e)) {
+    // kernel nodes: FaceAlignmentNode runs two (landmarks, detections)
+    for ((label, nodes, kernelCount) <- Seq(("roster", roster, 4), ("e2e", e2e, 6))) {
       val pipe = Pipeline(nodes, s"$dir/$label")
       var fresh = Seq.empty[PipelineReport]
       val freshRuns = actions { fresh = pipe.execute(spark, spark.read.parquet(input))._2 }
@@ -336,6 +372,8 @@ class PipelineSpec extends SparkTestBase {
       assert(freshRuns.size == 1, s"$label: ${freshRuns.size} actions ran the nodes")
       assert(joins(freshRuns.head).isEmpty,
         s"$label: join in the fresh plan:\n${freshRuns.head.optimizedPlan}")
+      assert(kernels(freshRuns.head) == kernelCount,
+        s"$label: kernels in the fresh plan:\n${freshRuns.head.optimizedPlan}")
       assert(count(fresh, "_pipeline", "processed") == 3)
 
       var memo = Seq.empty[PipelineReport]
@@ -367,6 +405,23 @@ class PipelineSpec extends SparkTestBase {
       ("clip_b", 1, 1, 24, 25), ("clip_c", 3, 3, 37, 38)))
     assert(names(spark.read.parquet(s"$dir/roster/_manifest")) ==
       Seq("clip_a", "clip_b", "clip_c"))
+
+    // the ffmpeg shell-outs append in place too: one action, no join, and
+    // each node's kernel once (a join back on name decoded each video once
+    // per downstream join)
+    val videoInput = s"$dir/videos_in"
+    Seq(("clip_a", Array[Byte](1, 2, 3)), ("clip_b", Array[Byte](4, 5)),
+      ("clip_c", Array[Byte](6))).toDF("name", "video").coalesce(1).write.parquet(videoInput)
+    val ffmpeg = Seq(NodeSpec("video_to_frames"), NodeSpec("video_to_wav"),
+      NodeSpec("probe_fps"), NodeSpec("wav2vec"))
+    var rep = Seq.empty[PipelineReport]
+    val runs = actions {
+      rep = Pipeline(ffmpeg, s"$dir/ffmpeg").execute(spark, spark.read.parquet(videoInput))._2
+    }.filter(runsNodes)
+    assert(runs.size == 1, s"ffmpeg: ${runs.size} actions ran the nodes")
+    assert(joins(runs.head).isEmpty && kernels(runs.head) == 4,
+      s"ffmpeg: fresh plan:\n${runs.head.optimizedPlan}")
+    assert(count(rep, "_pipeline", "processed") + count(rep, "_pipeline", "errors") == 3)
   }
 
   test("pipeline graph JSON parses the reference shape") {
@@ -402,9 +457,6 @@ class PipelineSpec extends SparkTestBase {
       ClipCatalog.intersectOnName(Seq(a, disjoint))
     }
     assert(eJoin.getMessage.contains("empty name intersection"))
-    // opting out of the intersection probe defers emptiness to evaluation
-    assert(ClipCatalog.intersectOnName(Seq(a, disjoint),
-      probeIntersection = false).count() == 0L)
   }
 
   test("NPY codec reads numpy-written f8/f4/i8 and roundtrips f8") {

@@ -15,7 +15,7 @@ class VisionSpec extends SparkTestBase {
 
   test("detectFaces emits (N,5) candidates per frame; bestFacePerFrame picks max score") {
     val df = frames.toDF("name", "frames")
-    val det = Vision.detectFaces(df, "name", "frames")
+    val det = Vision.withDetections(df, "frames").select("name", "raw_bboxes")
     val rows = det.orderBy("name").collect()
     assert(rows.map(_.getString(0)).toSeq == Seq("clip_a", "clip_b"))
     val cands = rows(0).getSeq[scala.collection.Seq[scala.collection.Seq[Double]]](1)
@@ -52,16 +52,19 @@ class VisionSpec extends SparkTestBase {
 
   test("alignFaces emits 68 struct<x,y> landmarks per frame; emoca emits §1.3 shapes") {
     val df = frames.toDF("name", "frames")
-    val lm = Vision.alignFaces(df, "name", "frames").orderBy("name").head
+    val lm = Vision.withLandmarks(df, "frames").select("name", "landmarks")
+      .orderBy("name").head
     val perFrame = lm.getSeq[scala.collection.Seq[org.apache.spark.sql.Row]](1)
     assert(perFrame.head.length == 68 && perFrame.head.forall(_.length == 2))
-    val codes = Vision.emocaEncode(df, "name", "frames").orderBy("name").head
+    def emoca = Vision.withEmoca(df, "frames")
+      .select("name", "shape", "tex", "exp", "pose", "cam", "light").orderBy("name").head
+    val codes = emoca
     assert(codes.getSeq[scala.collection.Seq[Double]](1).head.length == 100) // shape
     assert(codes.getSeq[scala.collection.Seq[Double]](3).head.length == 50)  // exp
     assert(codes.getSeq[scala.collection.Seq[Double]](4).head.length == 6)   // pose
     assert(codes.getSeq[scala.collection.Seq[scala.collection.Seq[Double]]](6).head.length == 9) // light 9x3
     // determinism
-    val codes2 = Vision.emocaEncode(df, "name", "frames").orderBy("name").head
+    val codes2 = emoca
     assert(codes.getSeq[scala.collection.Seq[Double]](1) == codes2.getSeq[scala.collection.Seq[Double]](1))
   }
 
